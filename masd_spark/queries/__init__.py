@@ -6,6 +6,13 @@ optionally paired with an ANSI-SQL oracle string that DuckDB runs on the
 same parquet fixtures. Column names/types are aligned on both sides because
 the harness compares (row count, schema, order-insensitive value hash).
 
+Registry order is import order: ``load_all`` imports the query modules and
+returns ``REGISTRY`` as they filled it. Nothing is derived from past runs,
+so no committed artifact has to be regenerated after an edit. Every query
+is value-checked on every test run instead: ``tests/oracle.py`` compares
+each oracled query with DuckDB, and ``tests/test_parity_audit.py`` fails
+the suite if an oracled query has no local parity test.
+
 Oracle-parity conventions (see tests/oracle.py for the local twin of the
 driver's check):
 - timestamps are surfaced as epoch-ms BIGINT (``unix_millis`` / DuckDB
@@ -34,62 +41,9 @@ class QuerySpec:
     oracle: str | None = None
     headline: bool = False  # include in bench.py's per-round benchmark
     doc: str = ""
-    family: str = ""  # defining query module (registry_manifest.json key)
-    src_fingerprint: str = ""  # cheap hash: fn source + oracle (cache key)
-    module: str = ""  # full dotted registering module (closure root)
-    raw_fn: Callable | None = None  # unwrapped fn (plan-fp source hashing)
 
 
 REGISTRY: dict[str, QuerySpec] = {}
-
-# Cache of registering-module source hashes (one file read per module).
-_MODULE_SRC_HASH: dict[str, str] = {}
-
-
-def _module_src_hash(module_name: str) -> str:
-    import hashlib
-    import sys
-
-    h = _MODULE_SRC_HASH.get(module_name)
-    if h is None:
-        try:
-            path = sys.modules[module_name].__file__
-            data = open(path, "rb").read()
-        except (KeyError, AttributeError, OSError, TypeError):
-            data = module_name.encode()
-        h = hashlib.sha256(data).hexdigest()
-        _MODULE_SRC_HASH[module_name] = h
-    return h
-
-
-def _query_fingerprint(fn, oracle: str | None) -> str:
-    """Cheap per-query SOURCE hash: sha256 of the registered function's own
-    source text plus its (fully-composed) oracle string. Since round 8 this
-    is no longer the certified fingerprint — it is one ingredient of
-    planfp.dep_key, the static staleness key that decides when the real
-    PLAN-CONTENT fingerprint (masd_spark/queries/planfp.py) must be
-    recomputed. The plan fingerprint closes this hash's known blind spot
-    (VERDICT r7 item 1): edits to shared helpers in operators/*.py changed
-    results without moving any source hash; the analyzed-plan text moves
-    with every transitively-reached helper.
-    """
-    import hashlib
-    import inspect
-
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
-        # source unavailable (exec'd module / frozen build): fall back to
-        # the registering module's file hash — coarser, never blind
-        src = _module_src_hash(fn.__module__)
-    return hashlib.sha256(
-        (src + "\x00" + (oracle or "")).encode()
-    ).hexdigest()[:20]
-
-# How many queries (in registration order) the driver's CORRECTNESS harness
-# actually executes per round. Registration order is therefore a per-round
-# *verification window*, rotated deliberately — see load_all().
-DRIVER_WINDOW = 50
 
 
 def register(
@@ -108,10 +62,6 @@ def register(
             oracle,
             headline,
             doc or (fn.__doc__ or ""),
-            family=fn.__module__.rsplit(".", 1)[-1],
-            src_fingerprint=_query_fingerprint(fn, oracle),
-            module=fn.__module__,
-            raw_fn=fn,
         )
         return fn
 
@@ -196,235 +146,9 @@ def finite_values(df: DataFrame, col: str = "value") -> DataFrame:
     )
 
 
-# Pinned first in every round's window: entry()'s flagship must always be
-# registered and driver-smoke-checked.
-FLAGSHIP = "masd_sensor_rollup"
-
-
-def _tracked_correctness_artifacts(root) -> list:
-    """The CORRECTNESS_r*.json files that are GIT-TRACKED at repo root.
-
-    Root fix for the manifest race (VERDICT r6 item 1): the external
-    driver writes CORRECTNESS_r{N}.json AFTER the builder's final commit,
-    so a filesystem glob sees one more artifact at judging time than the
-    committed ``registry_manifest.json`` was generated from — the
-    committed manifest could never match the live one, failing
-    tests/test_registry.py two rounds running. Rotation state must
-    therefore derive from *committed* artifacts only: ``git ls-files``
-    is the source of truth, and an untracked late-arriving artifact is
-    invisible until the driver commits it at the next round's start.
-    Falls back to the plain glob only if git itself is unavailable
-    (e.g. the package is run from an exported tarball).
-    """
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            ["git", "ls-files", "--cached", "CORRECTNESS_r*.json"],
-            cwd=root,
-            capture_output=True,
-            text=True,
-            timeout=30,
-            check=True,
-        )
-        return [root / line for line in out.stdout.splitlines() if line]
-    except Exception:
-        return sorted(root.glob("CORRECTNESS_r*.json"))
-
-
-def last_checked_rounds() -> dict[str, int]:
-    """Map query name -> latest round with a GREEN row in a *git-tracked*
-    CORRECTNESS_r{N}.json.
-
-    The CORRECTNESS artifacts committed at the repo root by the external
-    driver ARE the rotation state: deriving ``last_checked_round`` from
-    them (instead of a hand-maintained file) makes the round-robin
-    self-updating — the moment the driver lands round N's results, round
-    N+1's import order pushes freshly-GREEN queries to the back. Three
-    deliberate asymmetries:
-
-    - only GIT-TRACKED artifacts count (see
-      :func:`_tracked_correctness_artifacts`): the driver's post-commit
-      artifact for the in-flight round can never redden the committed
-      manifest;
-    - only green rows count (see :func:`_row_is_green`): a query that
-      FAILED its check keeps last_checked 0 unless an earlier round was
-      green, so a regression re-enters the very next window instead of
-      hiding for a full rotation cycle;
-    - queries absent from every artifact (never checked) map to 0.
-    """
-    import json
-    import re
-
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parents[2]
-    out: dict[str, int] = {}
-    for p in _tracked_correctness_artifacts(root):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            data = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            if _row_is_green(row):
-                out[name] = max(out.get(name, 0), rnd)
-    return out
-
-
-def _row_is_green(row) -> bool:
-    """A driver correctness row counts as green evidence when the oracle
-    comparison fully matched, or the query is rows-only by design
-    (err == 'no_oracle') and executed (spark_rows present). Any failure —
-    hash/schema/rows mismatch or an execution error — does NOT count, so
-    the rotation keeps the query in the front of the next window."""
-    if not isinstance(row, dict):
-        return False
-    err = row.get("err")
-    if err == "no_oracle":
-        return row.get("spark_rows") is not None
-    if err is not None:
-        return False
-    return bool(
-        row.get("rows_match")
-        and row.get("schema_match")
-        and row.get("hash_match")
-    )
-
-
-def rotation_order(names: list[str], checked: dict[str, int]) -> list[str]:
-    """Deterministic round-robin: stalest-first, flagship pinned to slot 0.
-
-    Sort key ``(name != FLAGSHIP, last_checked_round, registration
-    position)`` — stale queries fill the window before anything already
-    confirmed, in two tiers: edited-since-green (-1, a possibly
-    invalidated claim) ahead of never-checked (0, a new claim); among
-    equals the original module registration order (a deliberate family
-    grouping) breaks ties.
-    With W=DRIVER_WINDOW slots and N queries this guarantees every query
-    is re-checked at least every ceil((N-1)/(W-1)) rounds
-    (tests/test_rotation.py simulates and asserts this bound).
-    """
-    pos = {n: i for i, n in enumerate(names)}
-    return sorted(names, key=lambda n: (n != FLAGSHIP, checked.get(n, 0), pos[n]))
-
-
-FINGERPRINT_FILE = "query_fingerprints.json"
-
-
-def _fingerprint_path():
-    from pathlib import Path
-
-    return Path(__file__).resolve().parents[2] / FINGERPRINT_FILE
-
-
-def certified_fingerprints() -> dict[str, dict]:
-    """The git-tracked certification state: query name -> {"fingerprint",
-    "round"} — the content fingerprint that was live when the driver last
-    confirmed the query green, and that round number. Written only by
-    :func:`sync_fingerprints` (called from ``write_manifest`` at round
-    start, before any code edits)."""
-    import json
-
-    try:
-        return json.loads(_fingerprint_path().read_text())
-    except (OSError, ValueError):
-        return {}
-
-
-def current_plan_fingerprints() -> dict[str, str | None]:
-    """Plan-content fingerprints for every registered query, from the
-    git-tracked cache (planfp.py). None = the cached entry is stale (a
-    file in the query's module closure was edited since the last
-    ``write_manifest``); the fingerprint is unknown until a refresh
-    recomputes it, and the rotation treats the query as possibly
-    invalidated meanwhile."""
-    from masd_spark.queries import planfp
-
-    _import_query_modules()
-    return planfp.current_fingerprints(REGISTRY)
-
-
-def effective_checked_rounds() -> dict[str, int]:
-    """Rotation staleness with the changed-since-checked policy (VERDICT
-    r6 item 2; r7 item 1 upgraded the fingerprint from source-text to
-    plan-content): a query's effective last-checked round is the round its
-    CURRENT plan fingerprint was certified green at. Two classes sort
-    ahead of every confirmed query:
-
-    - ``-1`` — certified green once, but the plan fingerprint changed
-      (or is UNKNOWN because a closure file was edited and the cache
-      hasn't been refreshed): the existing green is possibly INVALIDATED
-      (a latent regression), so re-verifying it outranks everything,
-      including first-time checks of new registrations;
-    - ``0`` — never driver-confirmed: a first-time check establishes a
-      NEW claim; urgent, but nothing previously vouched-for is at stake.
-
-    The distinction matters only when the stale set exactly fills the
-    window: an edit can then defer a new registration's first check by
-    one round, never the reverse — re-earning possibly-stale greens is
-    the higher audit priority.
-
-    Uses the certified round (not the raw artifact round) so that a
-    freshly-tracked artifact whose fingerprints haven't been synced yet
-    can only make queries look STALER, never fresher.
-    """
-    _import_query_modules()
-    certified = certified_fingerprints()
-    plan_fps = current_plan_fingerprints()
-    out: dict[str, int] = {}
-    for name in REGISTRY:
-        rec = certified.get(name)
-        fp = plan_fps.get(name)
-        if rec and fp is not None and rec.get("fingerprint") == fp:
-            out[name] = int(rec.get("round", 0))
-        elif rec:
-            out[name] = -1
-        else:
-            out[name] = 0
-    return out
-
-
-def sync_fingerprints() -> None:
-    """Certify current fingerprints against newly-landed driver greens.
-
-    For each registered query whose latest green round in the GIT-TRACKED
-    CORRECTNESS artifacts is newer than its certified record, record the
-    query's CURRENT fingerprint at that round. Run at ROUND START (the
-    ``write_manifest`` protocol), when the working tree is exactly the
-    state the driver judged — so "current fingerprint" IS the fingerprint
-    the green run executed. Within a round the tracked-artifact set never
-    advances, so re-running after edits is a no-op and cannot launder an
-    edited query's staleness.
-    """
-    import json
-
-    _import_query_modules()
-    checked = last_checked_rounds()
-    certified = certified_fingerprints()
-    plan_fps = current_plan_fingerprints()
-    out: dict[str, dict] = {}
-    for name in REGISTRY:
-        rec = certified.get(name)
-        rnd = checked.get(name, 0)
-        fp = plan_fps.get(name)
-        # fp None (stale cache at sync time) -> can't certify an unknown
-        # fingerprint; keep the old record so the query stays -1
-        if fp is not None and rnd > 0 and rnd > (
-            rec.get("round", -1) if rec else -1
-        ):
-            rec = {"fingerprint": fp, "round": rnd}
-        if rec:
-            out[name] = rec
-    with open(_fingerprint_path(), "w") as f:
-        json.dump(out, f, indent=1, sort_keys=True)
-        f.write("\n")
-
-
-def _import_query_modules() -> None:
+def load_all() -> dict[str, QuerySpec]:
+    """Import every query module (side effect: fills REGISTRY) and return
+    REGISTRY, in import order."""
     from masd_spark.queries import (  # noqa: F401
         masd_core,
         similarity,
@@ -449,78 +173,4 @@ def _import_query_modules() -> None:
         ann_eval,  # must import after similarity: composes its oracles
     )
 
-
-def load_all(checked: dict[str, int] | None = None) -> dict[str, QuerySpec]:
-    """Import every query module (side effect: fills REGISTRY), then apply
-    the standing rotation policy (VERDICT r4 item 1).
-
-    Import order is NOT the driver's verification order anymore: after all
-    modules register, REGISTRY is reordered stalest-first via
-    ``rotation_order`` — staleness being the fingerprint-aware
-    ``effective_checked_rounds`` — so the external CORRECTNESS harness
-    (which executes only the first ``DRIVER_WINDOW`` queries each round)
-    always sees the queries that have gone longest without a driver-
-    confirmed row for their CURRENT content. The local oracle twin
-    (tests/oracle.py) still value-checks every query regardless of order.
-    """
-    _import_query_modules()
-    if checked is None:
-        checked = effective_checked_rounds()
-    order = rotation_order(list(REGISTRY), checked)
-    if order != list(REGISTRY):
-        reordered = {n: REGISTRY[n] for n in order}
-        REGISTRY.clear()
-        REGISTRY.update(reordered)
     return REGISTRY
-
-
-def manifest(round_checked: int = DRIVER_WINDOW) -> list[dict]:
-    """Registry manifest rows: name, family, oracled?, in driver window?
-
-    Emitted to ``registry_manifest.json`` each round so coverage drift of
-    the driver's 50-query window is visible without reverse-engineering
-    import order (VERDICT r3 item 8). ``last_checked_round`` (VERDICT r4
-    item 8) is the fingerprint-aware effective staleness derived from the
-    GIT-TRACKED CORRECTNESS_r*.json artifacts and the certified
-    fingerprint file — 0 means the driver has never executed the query,
-    -1 means it was driver-green once but the query's content changed
-    since (both sort into the next window; -1 first).
-    """
-    # compute staleness ONCE and share with load_all's rotation, so
-    # position and last_checked_round can never disagree
-    checked = effective_checked_rounds()
-    plan_fps = current_plan_fingerprints()
-    rows = []
-    for i, spec in enumerate(load_all(checked).values()):
-        rows.append(
-            {
-                "name": spec.name,
-                "family": spec.family,
-                "oracled": spec.oracle is not None,
-                "headline": spec.headline,
-                "position": i,
-                "last_checked_round": checked.get(spec.name, 0),
-                "driver_checked_this_round": i < round_checked,
-                "fingerprint": plan_fps.get(spec.name),
-            }
-        )
-    return rows
-
-
-def write_manifest(path: str = "registry_manifest.json") -> None:
-    """Round-start protocol AND after-any-edit protocol: refresh stale
-    plan fingerprints (runs each affected query's plan construction
-    against the tiny fixture — needs Spark only when something actually
-    changed), certify fingerprints against any newly-tracked driver
-    artifact (a no-op mid-round), then emit the manifest."""
-    import json
-
-    from masd_spark.queries import planfp
-
-    _import_query_modules()
-    planfp.clear_closure_cache()
-    planfp.refresh(REGISTRY, log=print)
-    sync_fingerprints()
-    with open(path, "w") as f:
-        json.dump(manifest(), f, indent=1)
-        f.write("\n")

@@ -264,8 +264,7 @@ def _simhash_wide_oracle(n_bits: int = 60) -> str:
 # NOTE: the 60-bit fingerprint (operators/text.py:simhash_wide) is
 # deliberately NOT a separate registered query — its construction is
 # value-checked end-to-end inside dedup_simhash_wide's oracle (the sim
-# CTE), and the registry is growth-frozen at <=210 while the driver
-# verification backlog drains (tests/test_rotation.py).
+# CTE).
 
 
 @register("text_simhash", oracle=_simhash_oracle())

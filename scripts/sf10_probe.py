@@ -69,10 +69,11 @@ HASH_PARITY = {
 }
 
 
-def _next_round() -> int:
+def _next_round(prefix: str) -> int:
+    """One past the newest committed {prefix}_r{N}.json."""
     rounds = [0]
-    for p in REPO.glob("CORRECTNESS_r*.json"):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
+    for p in REPO.glob(f"{prefix}_r*.json"):
+        m = re.fullmatch(rf"{re.escape(prefix)}_r(\d+)\.json", p.name)
         if m:
             rounds.append(int(m.group(1)))
     return max(rounds) + 1
@@ -142,7 +143,7 @@ def main() -> int:
             rnd = int(argv[i])
             i += 1
     if rnd is None:
-        rnd = _next_round()
+        rnd = _next_round(prefix)
 
     from masd_spark.queries import load_all
     from masd_spark.session import get_spark

@@ -6,15 +6,15 @@ parity evidence is sf0.1. This tool runs the DuckDB value comparison for
 ALL oracled registered queries at SF1 (~10x that), closing the gap in
 one committed artifact.
 
-Serial execution is infeasible: the rotation order fronts the opaque
-ANN/cluster/graph families, whose oracles REBUILD the whole index /
-iteration in SQL (measured: ann_ivf_persisted_topk alone 625s at SF1),
-and a single process runs the registry in ~10h. Since the artifact
-records PARITY (pass/fail), not timing, the sweep shards the name list
-round-robin across N worker processes (parity_sweep.py --exact --only),
-each with its own Spark session and a thread-capped DuckDB
-(MASD_ORACLE_THREADS) so shards don't thrash each other. Round-robin
-interleaving spreads the expensive front-of-rotation families evenly.
+Serial execution is infeasible: the opaque ANN/cluster/graph families'
+oracles REBUILD the whole index / iteration in SQL (measured:
+ann_ivf_persisted_topk alone 625s at SF1), and a single process runs the
+registry in ~10h. Since the artifact records PARITY (pass/fail), not
+timing, the sweep shards the name list round-robin across N worker
+processes (parity_sweep.py --exact --only), each with its own Spark
+session and a thread-capped DuckDB (MASD_ORACLE_THREADS) so shards don't
+thrash each other. Round-robin interleaving spreads the expensive
+families, which register next to each other, evenly.
 Per-query seconds are recorded for triage but are CONTENDED numbers —
 SF1SWEEP / SF10PROBE own the quiet-host timing claims.
 

@@ -58,9 +58,10 @@ SWEEP_QUERIES = [
 
 
 def _next_round() -> int:
+    """One past the newest committed SF1SWEEP_r{N}.json."""
     rounds = [0]
-    for p in REPO.glob("CORRECTNESS_r*.json"):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
+    for p in REPO.glob("SF1SWEEP_r*.json"):
+        m = re.fullmatch(r"SF1SWEEP_r(\d+)\.json", p.name)
         if m:
             rounds.append(int(m.group(1)))
     return max(rounds) + 1

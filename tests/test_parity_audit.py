@@ -1,14 +1,11 @@
 """Meta-audit: every oracled registered query must have a LOCAL
 compare_query parity row somewhere in tests/.
 
-The driver's CORRECTNESS harness only executes the first DRIVER_WINDOW
-registered queries per round, and the standing rotation
-(masd_spark/queries/__init__.py:rotation_order) decides which those are.
-A query whose first-ever value check happens ON the driver is a latent
-RED row — round-5 found two such (basket_brand_affinity,
-bi_rfm_segments, both already inside the round-5 window). This audit
-makes the invariant structural: registering an oracled query without a
-local compare_query test fails the suite immediately.
+This audit is the structural guarantee that every oracled query is
+value-checked against DuckDB (tests/oracle.py) on every test run:
+registering an oracled query without a local compare_query test fails the
+suite immediately, so no query meets its first value check outside this
+suite, as two did in round 5 (basket_brand_affinity, bi_rfm_segments).
 
 Detection is AST-based, matching the two idioms the suite uses:
   - direct:   compare_query(spark, REGISTRY["name"], SF_ORACLE)
