@@ -86,14 +86,15 @@ _EMB_VALID = (
 
 def scratch_path(name: str) -> str:
     """Location for a per-run throwaway artifact (persisted index
-    tables, layout demos) — on tmpfs when available (optimization r8,
-    guide §6). These queries rebuild their artifact every run from the
-    parquet inputs; only WHERE the scratch bytes land changes, and on
-    this host /tmp is the erratic block device the session already
-    routes shuffle files around (session.py spark.local.dir).
-    ``MASD_SCRATCH`` overrides (a real cluster points it at job-local
-    SSD or a warehouse prefix); without /dev/shm the old tempfile
-    default is used unchanged."""
+    tables, layout demos, the streaming twins' drops/sink/checkpoint) —
+    on tmpfs when available (optimization r8, guide §6). These queries
+    rebuild their artifact every run; only WHERE the scratch bytes land
+    changes, and a block-device /tmp can stall on the many tiny fsynced
+    files a checkpoint writes per trigger. ``MASD_SCRATCH`` overrides (a
+    real cluster points it at job-local SSD or a warehouse prefix);
+    without /dev/shm the tempfile default is used. ``scratch_path("")``
+    is the scratch directory itself, for callers that need a fresh
+    ``tempfile.mkdtemp`` under it."""
     import os
     import tempfile
 

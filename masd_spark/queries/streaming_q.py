@@ -9,7 +9,6 @@ operators.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import shutil
 import tempfile
@@ -17,7 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from masd_spark.queries import register
+from masd_spark.queries import register, scratch_path
 from masd_spark.sources.simulator import SimulatorConfig, write_json_drops
 from masd_spark.streaming.pipeline import (
     read_file_sensor_stream,
@@ -27,57 +26,6 @@ from masd_spark.streaming.pipeline import (
 
 
 _KEY_COLS = ["window_start_ms", "station_id", "station_name", "sensor_id"]
-
-
-def _scratch_dir(prefix: str) -> str:
-    """Per-run scratch (drops / sink / checkpoint) for the micro-stream
-    twins — on tmpfs when available (optimization r8, guide §6/§2.1).
-
-    Every one of these queries writes its checkpoint deltas, sink parquet
-    and source drops to a throwaway tempdir; on this host /tmp is the
-    erratic block device the session already routes shuffle files around
-    (see session.py spark.local.dir), and a 4-batch stream pays it 32+
-    tiny fsynced files per trigger. Placement of scratch I/O changes no
-    emitted row. ``MASD_STREAM_SCRATCH`` overrides (e.g. a real cluster
-    points it at job-local SSD); without /dev/shm the behavior is exactly
-    the old tempfile default."""
-    base = os.getenv("MASD_STREAM_SCRATCH")
-    if base is None and os.path.isdir("/dev/shm"):
-        base = "/dev/shm/masd-stream-scratch"
-    if base:
-        os.makedirs(base, exist_ok=True)
-        return tempfile.mkdtemp(prefix=prefix, dir=base)
-    return tempfile.mkdtemp(prefix=prefix)
-
-
-@contextlib.contextmanager
-def _stream_state_partitions(spark: SparkSession):
-    """Pin ``spark.sql.shuffle.partitions`` (= streaming state-store
-    partition count, fixed at first start by the fresh per-run
-    checkpoint) to a value sized for these fixture-scale twins
-    (optimization r8, guide §2.2).
-
-    Each stateful operator maintains one state-store instance PER shuffle
-    partition PER micro-batch — at 32 partitions the 3-file streams here
-    commit 32 store snapshots (32 RocksDB instances for the TWS queries)
-    per trigger to hold <=400 keys, which is pure machinery. Grouping,
-    watermarks, dedup, timers and join matching are all per-key and
-    partitioning-independent, so the emitted row set is identical (the
-    batch-twin pins in tests/test_streaming.py hold unchanged).
-
-    Scale-parameterized, not a local constant: ``MASD_STREAM_STATE_PARTITIONS``
-    sizes it (a production deployment sizes state partitions to key
-    cardinality x throughput, e.g. back to cores or far above); the
-    default 4 fits the <=5k-rows-per-trigger fixture streams. Restored
-    after the stream drains so batch queries keep the session default."""
-    n = os.getenv("MASD_STREAM_STATE_PARTITIONS", "4")
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, n)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, saved)
 
 
 @register("streaming_masd_rollup")
@@ -94,7 +42,7 @@ def streaming_masd_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    workdir = _scratch_dir("masd_stream_q_")
+    workdir = tempfile.mkdtemp(prefix="masd_stream_q_", dir=scratch_path(""))
     src = os.path.join(workdir, "drops")
     sink_dir = os.path.join(workdir, "sink")
     try:
@@ -120,20 +68,19 @@ def streaming_masd_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(sink_dir)
             )
 
-        with _stream_state_partitions(spark):
-            agg = sensor_pipeline(
-                read_file_sensor_stream(spark, src),
-                watermark_delay="10 minutes",
-                nest=False,
-            )
-            q = start_keyed_sink(
-                agg,
-                path=sink_dir,
-                checkpoint_dir=os.path.join(workdir, "ckpt"),
-                available_now=True,
-                write_batch=write_batch,
-            )
-            q.awaitTermination(600)
+        agg = sensor_pipeline(
+            read_file_sensor_stream(spark, src),
+            watermark_delay="10 minutes",
+            nest=False,
+        )
+        q = start_keyed_sink(
+            agg,
+            path=sink_dir,
+            checkpoint_dir=os.path.join(workdir, "ckpt"),
+            available_now=True,
+            write_batch=write_batch,
+        )
+        q.awaitTermination(600)
 
         w = Window.partitionBy(*_KEY_COLS).orderBy(F.col("batch_id").desc())
         latest = (
@@ -183,7 +130,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     except ImportError:
         use_tws = False
 
-    workdir = _scratch_dir("masd_hh_q_")
+    workdir = tempfile.mkdtemp(prefix="masd_hh_q_", dir=scratch_path(""))
     src = os.path.join(workdir, "drops")
     sink_dir = os.path.join(workdir, "sink")
     provider_key = "spark.sql.streaming.stateStore.providerClass"
@@ -210,15 +157,14 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(sink_dir)
             )
 
-        with _stream_state_partitions(spark):
-            q = (
-                out.writeStream.foreachBatch(write_batch)
-                .outputMode("update")
-                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(600)
+        q = (
+            out.writeStream.foreachBatch(write_batch)
+            .outputMode("update")
+            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(600)
 
         from pyspark.sql import Window
 
@@ -266,7 +212,7 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_event_time_ms,
     )
 
-    workdir = _scratch_dir("masd_sdq_")
+    workdir = tempfile.mkdtemp(prefix="masd_sdq_", dir=scratch_path(""))
     src = os.path.join(workdir, "drops")
     sink_dir = os.path.join(workdir, "sink")
     try:
@@ -296,15 +242,14 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(sink_dir)
             )
 
-        with _stream_state_partitions(spark):
-            q = (
-                counts.writeStream.foreachBatch(write_batch)
-                .outputMode("update")
-                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(600)
+        q = (
+            counts.writeStream.foreachBatch(write_batch)
+            .outputMode("update")
+            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(600)
 
         from pyspark.sql import Window
 
@@ -361,7 +306,7 @@ def streaming_timer_sessions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         burst("bob", base + 180_000) + burst("cara", base + 180_000),
     ]
 
-    workdir = _scratch_dir("masd_tsess_q_")
+    workdir = tempfile.mkdtemp(prefix="masd_tsess_q_", dir=scratch_path(""))
     src = os.path.join(workdir, "drops")
     sink_dir = os.path.join(workdir, "sink")
     provider_key = "spark.sql.streaming.stateStore.providerClass"
@@ -381,17 +326,16 @@ def streaming_timer_sessions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = streaming_timer_sessions(
             stream.withWatermark("event_time", "1 second"), gap_ms=30_000
         )
-        with _stream_state_partitions(spark):
-            q = (
-                out.writeStream.foreachBatch(
-                    lambda df, bid: df.write.mode("append").parquet(sink_dir)
-                )
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
+        q = (
+            out.writeStream.foreachBatch(
+                lambda df, bid: df.write.mode("append").parquet(sink_dir)
             )
-            q.awaitTermination(600)
+            .outputMode("append")
+            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(600)
         return spark.read.parquet(sink_dir).localCheckpoint(eager=True)
     finally:
         if saved_provider is None:
@@ -424,7 +368,7 @@ def streaming_sensor_ewma_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from masd_spark.operators.validate import classify_validity
     from masd_spark.streaming.stateful import streaming_sensor_ewma
 
-    workdir = _scratch_dir("masd_ewma_q_")
+    workdir = tempfile.mkdtemp(prefix="masd_ewma_q_", dir=scratch_path(""))
     src = os.path.join(workdir, "drops")
     sink_dir = os.path.join(workdir, "sink")
     try:
@@ -441,15 +385,14 @@ def streaming_sensor_ewma_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(sink_dir)
             )
 
-        with _stream_state_partitions(spark):
-            q = (
-                out.writeStream.foreachBatch(write_batch)
-                .outputMode("update")
-                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(600)
+        q = (
+            out.writeStream.foreachBatch(write_batch)
+            .outputMode("update")
+            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(600)
 
         from pyspark.sql import Window
 
@@ -487,7 +430,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import json as _json
 
-    workdir = _scratch_dir("masd_ssj_q_")
+    workdir = tempfile.mkdtemp(prefix="masd_ssj_q_", dir=scratch_path(""))
     cdir = os.path.join(workdir, "clicks")
     pdir = os.path.join(workdir, "purch")
     try:
@@ -535,16 +478,15 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(c["user_id"], "c_ts", "p_ts", "amount")
 
         sink_dir = os.path.join(workdir, "sink")
-        with _stream_state_partitions(spark):
-            q = (
-                joined.writeStream.foreachBatch(
-                    lambda df, bid: df.write.mode("append").parquet(sink_dir)
-                )
-                .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
+        q = (
+            joined.writeStream.foreachBatch(
+                lambda df, bid: df.write.mode("append").parquet(sink_dir)
             )
-            q.awaitTermination(600)
+            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(600)
         return spark.read.parquet(sink_dir).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)

@@ -3,7 +3,9 @@
 The reference builds a bare session with only Mongo connector configs
 (reference: spark-app/consumer.py:55-64). Our engine pins the configs that
 matter for correctness parity (UTC timezone, ns-timestamp handling) and for
-scale (AQE, skew-join handling, shuffle partitioning).
+scale (AQE, skew-join handling). Partition counts are not pinned: they are
+derived from the live session's ``defaultParallelism`` in one place,
+``ensure_io_confs``.
 """
 
 from __future__ import annotations
@@ -25,9 +27,6 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # A driver-provided session keeps Spark's default 200 shuffle
-    # partitions — wrong for both this 32-core box and the fixture sizes.
-    "spark.sql.shuffle.partitions": "32",
     # The Python Data Source sensor feed (sources/pyds.py) implements
     # pushFilters(); Spark refuses a reader that implements it while this
     # flag (default false in 4.1) is off.
@@ -42,23 +41,13 @@ RUNTIME_CONFS: dict[str, str] = {
     # bracket; the plan-shape assertions (plans/explain.py) parse those
     # brackets, and a 3-term pushed-filter list already overflows 100.
     "spark.sql.maxMetadataStringLength": "2000",
-    # Scan-parallelism FLOOR (optimization r8, guide §6): each fixture
-    # table is ONE parquet file (11 MB lineitem, 2 MB events, ...), and
-    # with the default 128 MB maxPartitionBytes + 4 MB openCostInBytes
-    # every scan planned into 1-3 input splits — single-digit cores doing
-    # all scan+map work while 30 sat idle. minPartitionNum only FLOORS parallelism
-    # (maxSplitBytes = min(maxPartitionBytes, max(openCost, bytes/N))),
-    # so at cluster scale, where bytes/N >> 128 MB, splits stay 128 MB
-    # and the setting is a no-op — scale-adaptive by construction, not a
-    # local[32] constant. openCostInBytes must drop with it or its 4 MB
-    # floor re-caps tiny files at ~3 splits; 64 KB keeps the many-small-
-    # files guard (a thousand 1 KB files still pack into few splits)
-    # while letting MB-scale fixture files split core-wide. Results are
-    # partitioning-independent (fuzzed by scripts/determinism_sweep.py
-    # regime B = 256 KB splits, and tests/test_determinism.py).
-    "spark.sql.files.minPartitionNum": str(
-        int(os.getenv("SPARK_GRAFT_CPUS", "32"))
-    ),
+    # Pairs with the files.minPartitionNum floor set by ensure_io_confs:
+    # the default 4 MB openCostInBytes would re-cap the MB-scale fixture
+    # files at ~3 input splits. 64 KB keeps the many-small-files guard (a
+    # thousand 1 KB files still pack into few splits) while letting those
+    # files split core-wide. Results are partitioning-independent (fuzzed
+    # by scripts/determinism_sweep.py regime B = 256 KB splits, and
+    # tests/test_determinism.py).
     "spark.sql.files.openCostInBytes": str(64 * 1024),
     # AQE post-shuffle coalescing floor (optimization r8, guide §2.2/2.5):
     # coalescePartitions.parallelismFirst already targets default
@@ -92,8 +81,25 @@ RUNTIME_CONFS: dict[str, str] = {
 
 
 def ensure_io_confs(spark: SparkSession) -> SparkSession:
-    """Apply RUNTIME_CONFS to an existing session (e.g. the driver's)."""
-    for k, v in RUNTIME_CONFS.items():
+    """Apply our confs to an existing session (e.g. the driver's).
+
+    Every partition count is sized here, from the live session's
+    ``defaultParallelism``: ``shuffle.partitions`` (also the state-store
+    partition count a new stream checkpoint is created with) and the
+    ``files.minPartitionNum`` scan-split floor, which only lowers the
+    split size (maxSplitBytes = min(maxPartitionBytes, max(openCost,
+    bytes/N))) and so is a no-op once bytes/N >> 128 MB. RUNTIME_CONFS
+    is applied after them, so a caller's entry for either key wins.
+    ``register`` re-runs this per query call, so on ``local-cluster`` the
+    count is read after the executors have registered.
+    """
+    n = str(spark.sparkContext.defaultParallelism)
+    confs = {
+        "spark.sql.shuffle.partitions": n,
+        "spark.sql.files.minPartitionNum": n,
+        **RUNTIME_CONFS,
+    }
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -104,15 +110,15 @@ def ensure_io_confs(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "masd-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
     extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or get) a session tuned for local[N] testing.
 
-    On a real cluster the same code runs unchanged; only master/memory/
-    shuffle-partition sizing comes from the environment
-    (``SPARK_GRAFT_CPUS`` mirrors the driver's bench environment).
+    On a real cluster the same code runs unchanged; only master and
+    memory come from the environment (``SPARK_MASTER``, else
+    ``local[$SPARK_GRAFT_CPUS]``, else ``local[*]``). Partition counts
+    follow the cores the session gets (see ``ensure_io_confs``).
     """
     # Must precede JVM launch: local-mode Python workers inherit PYTHONPATH
     # from the JVM's environment, which copies this process's at context
@@ -121,16 +127,13 @@ def get_spark(
 
     ensure_protobuf()
 
-    cpus = int(os.getenv("SPARK_GRAFT_CPUS", "32"))
+    cpus = os.getenv("SPARK_GRAFT_CPUS", "*")
     master = master or os.getenv("SPARK_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     driver_memory = driver_memory or os.getenv("MASD_DRIVER_MEMORY", "16g")
 
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

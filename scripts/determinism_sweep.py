@@ -5,7 +5,8 @@ proves a different property the oracle cannot see: the Spark result is a
 FUNCTION OF THE DATA, not of the physical partitioning. Each query runs
 twice in one session under deliberately different planning regimes —
 
-  regime A (baseline):  shuffle.partitions=32, default scan splits, AQE on
+  regime A (baseline):  shuffle.partitions=32 (explicit, not the session's
+                        derived default), default scan splits, AQE on
   regime B (perturbed): shuffle.partitions=7, 256 KiB scan splits (many
                         small input partitions => different row order
                         everywhere), openCostInBytes=0
@@ -57,10 +58,12 @@ REGIMES: list[tuple[str, str, str]] = [
 def _run_with_regime(spark, spec, sf_dir, col: int):
     """Run one query under regime A (col=1) or B (col=2).
 
-    ``register()`` re-asserts RUNTIME_CONFS (shuffle.partitions=32, AQE
-    settings) at the top of every query call, which would silently undo a
-    plain ``spark.conf.set`` override — so the regime is written into the
-    RUNTIME_CONFS dict itself for the duration of the run, then restored.
+    ``register()`` re-runs ``ensure_io_confs`` at the top of every query
+    call: it re-derives shuffle.partitions from ``defaultParallelism`` and
+    re-asserts RUNTIME_CONFS (AQE settings, openCostInBytes), which would
+    silently undo a plain ``spark.conf.set`` override — so the regime is
+    written into the RUNTIME_CONFS dict itself for the duration of the
+    run, then restored. A key in that dict wins over the derived value.
     """
     from oracle import _normalize
 
@@ -77,6 +80,11 @@ def _run_with_regime(spark, spec, sf_dir, col: int):
             masd_session.RUNTIME_CONFS[conf] = value
             spark.conf.set(conf, value)
         df = spec.fn(spark, sf_dir)
+        # the regime must have reached the query: ensure_io_confs derives
+        # the shuffle width, and only the RUNTIME_CONFS entry overrides it
+        width = spark.conf.get("spark.sql.shuffle.partitions")
+        if width != REGIMES[0][col]:
+            raise AssertionError(f"shuffle width {width} under regime {'AB'[col - 1]}")
         cols = df.columns
         rows = [tuple(r) for r in df.collect()]
         return _normalize(cols, rows)

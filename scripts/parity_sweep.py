@@ -70,10 +70,9 @@ def main() -> int:
 
     extra_confs = {}
     if master and master.startswith("local-cluster"):
-        # Same traps as tests/test_local_cluster.py: executorEnv.PYTHONPATH
+        # Same trap as tests/test_local_cluster.py: executorEnv.PYTHONPATH
         # OVERRIDES env inheritance, so compose it AFTER resolving the
-        # protobuf shim dir, and keep shuffle partitions modest for the
-        # 2x4-core worker topology.
+        # protobuf shim dir.
         import os
         import tempfile
 
@@ -91,7 +90,6 @@ def main() -> int:
     spark = get_spark(
         app_name="parity-sweep",
         master=master,
-        shuffle_partitions=16 if master and master.startswith("local-cluster") else None,
         extra_confs=extra_confs,
     )
     reg = load_all()

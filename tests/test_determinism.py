@@ -55,6 +55,10 @@ def _run(spark, spec, col: int):
             masd_session.RUNTIME_CONFS[conf] = value
             spark.conf.set(conf, value)
         df = spec.fn(spark, SF)
+        # the regime must have reached the query: ensure_io_confs derives
+        # the shuffle width, and only the RUNTIME_CONFS entry overrides it
+        width = spark.conf.get("spark.sql.shuffle.partitions")
+        assert width == REGIMES[0][1 + col], (spec.name, width)
         return _normalize(df.columns, [tuple(r) for r in df.collect()])
     finally:
         masd_session.RUNTIME_CONFS.clear()

@@ -40,7 +40,6 @@ ensure_protobuf()
 spark = get_spark(
     app_name="lc-smoke",
     master="local-cluster[2,4,4096]",
-    shuffle_partitions=16,
     driver_memory="4g",
     extra_confs={
         "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="lc_warehouse_"),
@@ -185,7 +184,6 @@ ensure_protobuf()
 spark = get_spark(
     app_name="lc-window",
     master="local-cluster[2,4,4096]",
-    shuffle_partitions=16,
     driver_memory="4g",
     extra_confs={
         "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="lc_warehouse_"),

@@ -40,7 +40,7 @@ from masd_spark.operators.dedup import (
 from masd_spark.operators.similarity import cosine_pairs, cosine_pairs_bucketed
 
 VIRAL = "click here to subscribe now"  # 5 tokens -> 3 viral 3-shingles
-N_PARTS = 32  # mirror of spark.sql.shuffle.partitions in the test session
+N_PARTS = 32  # simulated shuffle width, independent of the session's
 
 
 def _words(rng: random.Random, n: int) -> str:

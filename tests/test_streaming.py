@@ -555,6 +555,37 @@ def test_checkpoint_recovery(spark, tmp_path):
     assert sum(len(rows) for _b, rows in second) == 0
 
 
+def test_partition_counts_follow_default_parallelism(spark, tmp_path):
+    """Every partition count comes from the live session's
+    defaultParallelism (session.ensure_io_confs), so a new stream's
+    checkpoint holds one state partition per core, not a fixed count."""
+    import json
+
+    from masd_spark.session import ensure_io_confs
+
+    n = str(spark.sparkContext.defaultParallelism)
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.files.minPartitionNum")
+    assert [spark.conf.get(k) for k in keys] == [n, n]
+    ensure_io_confs(spark)
+    assert [spark.conf.get(k) for k in keys] == [n, n]
+
+    src = str(tmp_path / "drops")
+    write_json_drops(src, SimulatorConfig(duration_ms=30_000, seed=1), n_files=1)
+    ckpt = tmp_path / "ckpt"
+    q = start_keyed_sink(
+        sensor_pipeline(read_file_sensor_stream(spark, src)),
+        path=str(tmp_path / "out"),
+        checkpoint_dir=str(ckpt),
+        available_now=True,
+        write_batch=_collecting_sink([]),
+    )
+    q.awaitTermination(300)
+    # offsets log: version line, then the batch metadata with the confs
+    # the checkpoint pinned at creation
+    metadata = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
+    assert metadata["conf"]["spark.sql.shuffle.partitions"] == n
+
+
 def _run_heavy_hitters(spark, tmp_path, op, extra_confs=None):
     """Drive a heavy-hitters streaming operator over file drops and return
     (final emitted top-k per station, batch-twin expectation)."""
