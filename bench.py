@@ -1,12 +1,14 @@
-"""Per-round benchmark: runs the headline queries end-to-end at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+"""One cold pass over perfbench's batch mix at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test fixture), printed as ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec",
  "queries": {name: sec, ...}, "sf": <float>}.
 
-Each query is forced end-to-end with the noop sink (full computation,
-no driver collect). The first timed query pays JVM/codegen warm-up; a
-separate warm-up action absorbs session startup.
+The queries are perfbench's ``SENSOR_BATCH_MIX + LLM_MIX``
+(perfbench/workloads.py), so the benchmarked list lives in one place.
+Each query is built and forced with the noop sink inside its timed window
+(full computation, no driver collect); a warm-up action first absorbs
+session start-up. perfbench (BENCHMARK.json) is the gated benchmark; this
+runner is the driver contract's one-line summary.
 """
 
 from __future__ import annotations
@@ -17,403 +19,45 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+sys.path.insert(0, str(Path(__file__).resolve().parent / "perfbench"))
 
-# Round-1 per-query seconds at sf0.1 / local[32] — the explicit regression
-# bar: any headline query slower than 2x its r01 time fails the run loudly
-# (stderr + "regressions" key), per VERDICT r01 item 10.
-R01_BASELINE: dict[str, float] = {
-    "masd_sensor_rollup": 5.935,
-    "q1_pricing_summary": 3.936,
-    "q3_shipping_priority": 3.758,
-    "q5_nation_revenue": 3.101,
-    "sessionize_events": 2.309,
-    "asof_join_purchases": 1.879,
-    "dedup_ngram_jaccard": 10.547,
-    "dedup_minhash_lsh": 5.694,
-    "ann_cosine_topk": 9.389,
-}
-REGRESSION_FACTOR = 2.0
+from workloads import LLM_MIX, SENSOR_BATCH_MIX  # noqa: E402
 
 
-def _ab_verdict(
-    total: float, prev_sum: float, prior_now: float, head_now: float
-) -> tuple[str, float | None]:
-    """Attribute a warm-sum drift (``total`` > 1.15x ``prev_sum``) from
-    the two SAME-WINDOW re-measurements: ``prior_now`` (prior judging
-    commit) and ``head_now`` (this tree), run back-to-back subprocesses.
+def run(spark, sf_dir: str) -> dict:
+    """Time one pass over the mix on ``spark``; return the JSON line's dict."""
+    from masd_spark.queries import load_all
 
-    - head slower than prior in the same window -> code-drift (real).
-    - head re-measures well below the in-process ``total`` -> the
-      original number was an unlucky host window (host-window-noise).
-    - both windows slow vs the committed value -> host-drift.
-
-    Comparing either run against its COMMITTED value is unsound on this
-    host: degradation is intermittent, so a lucky prior window next to
-    an unlucky head window mimics code drift (observed round 7: head
-    35.9s / prior 15.1s with byte-identical operator code, followed
-    minutes later by head 15.x).
-    """
-    if head_now > 0 and prior_now > 0:
-        code_ratio = head_now / prior_now
-        if code_ratio > 1.15:
-            return "code-drift", code_ratio
-        if total > 1.15 * head_now:
-            return "host-window-noise", code_ratio
-        if prior_now > 1.15 * prev_sum:
-            return "host-drift", code_ratio
-        return "inconclusive", code_ratio
-    return ("host-drift" if prior_now > prev_sum else "code-drift"), None
-
-
-def _prev_committed_queries() -> dict[str, float]:
-    """Per-query seconds from the newest GIT-TRACKED BENCH artifact —
-    the drift reference for the targeted retry. Untracked/fresh files
-    are ignored for the same reason the rotation ignores untracked
-    CORRECTNESS artifacts: only committed history is a stable baseline."""
-    import re
-    import subprocess
-
-    root = Path(__file__).resolve().parent
-    try:
-        out = subprocess.run(
-            ["git", "ls-files", "BENCH_r*.json"], cwd=root,
-            capture_output=True, text=True, timeout=60, check=True,
-        ).stdout
-        arts = []
-        for p in out.splitlines():
-            m = re.fullmatch(r"BENCH_r(\d+)\.json", p)
-            if m:
-                arts.append((int(m.group(1)), p))
-        if not arts:
-            return {}
-        # read the COMMITTED blob, not the working-tree file — a locally
-        # modified artifact must not shift the retry bar (ADVICE r7).
-        # `git ls-files` also lists STAGED-but-uncommitted artifacts
-        # (this round's fresh BENCH after a `git add`), for which
-        # `git show HEAD:` fails — fall back through older artifacts to
-        # the newest one actually present in HEAD instead of silently
-        # dropping every committed baseline.
-        for _, path in sorted(arts, reverse=True):
-            blob = subprocess.run(
-                ["git", "show", f"HEAD:{path}"], cwd=root,
-                capture_output=True, text=True, timeout=60,
-            )
-            if blob.returncode != 0:
-                continue
-            prev = json.loads(blob.stdout)
-            qs = (
-                prev.get("queries")
-                or prev.get("parsed", {}).get("queries")
-                or {}
-            )
-            return {k: float(v) for k, v in qs.items() if v}
-        return {}
-    except Exception:  # noqa: BLE001
-        return {}
-
-
-def _maybe_ab_adjudicate(total: float, sf: float) -> dict | None:
-    """Round-over-round drift adjudication as DATA (VERDICT r6 item 8).
-
-    r4->r5->r6 drifted upward while binary-identical plans re-measured
-    slower on today's host — the standing protocol is a `git worktree`
-    A/B: re-run the EXACT prior-round judging commit's bench.py AND
-    head's, back-to-back on the same host — only the two same-window
-    numbers can attribute drift to code when host degradation is
-    intermittent. This embeds that experiment in the artifact
-    whenever the warm sum exceeds 1.15x the last committed BENCH value:
-    ``ab_prior_commit`` carries the prior commit sha, its re-measured
-    value, and per-query seconds, so drift adjudication is
-    machine-readable instead of COVERAGE prose.
-
-    The prior judging commit is the PARENT of the commit that added the
-    newest committed BENCH_r{N}.json (the driver commits round N's
-    artifacts on top of the builder's final round-N commit). The child
-    bench runs with MASD_BENCH_NO_AB=1 — one level of recursion only —
-    and after our own SparkSession stopped, so the two JVMs never
-    coexist.
-    """
-    import re
-    import shutil
-    import subprocess
-    import tempfile
-
-    if os.getenv("MASD_BENCH_NO_AB") or abs(sf - 0.1) > 1e-9:
-        return None
-    root = Path(__file__).resolve().parent
-
-    def git(*args: str, timeout: int = 60) -> str:
-        return subprocess.run(
-            ["git", *args], cwd=root, capture_output=True, text=True,
-            timeout=timeout, check=True,
-        ).stdout.strip()
-
-    try:
-        arts = []
-        for p in git("ls-files", "BENCH_r*.json").splitlines():
-            m = re.fullmatch(r"BENCH_r(\d+)\.json", p)
-            if m:
-                arts.append((int(m.group(1)), p))
-        if not arts:
-            return None
-        prev_n, prev_path = max(arts)
-        prev = json.loads((root / prev_path).read_text())
-        # the driver wraps bench.py's JSON line under "parsed"
-        prev_sum = float(
-            (prev.get("value") or prev.get("parsed", {}).get("value")) or 0
-        )
-        if prev_sum <= 0:
-            return None
-        ratio = total / prev_sum
-        if ratio <= 1.15:
-            return None
-        added = git("log", "--diff-filter=A", "--format=%H", "-n", "1", "--", prev_path)
-        base = git("rev-parse", f"{added}^") if added else git("rev-parse", "HEAD")
-    except Exception as exc:  # noqa: BLE001
-        return {"error": f"setup: {exc!r}"[:300]}
-
-    def run_bench(cwd: str) -> dict | None:
-        env = dict(os.environ, MASD_BENCH_NO_AB="1")
-        res = subprocess.run(
-            [sys.executable, "bench.py"], cwd=cwd, env=env,
-            capture_output=True, text=True, timeout=900,
-        )
-        for line in reversed(res.stdout.splitlines()):
-            line = line.strip()
-            if line.startswith("{"):
-                return json.loads(line)
-        return None
-
-    wt = tempfile.mkdtemp(prefix="bench_ab_")
-    try:
-        git("worktree", "add", "--detach", wt, base, timeout=120)
-        parsed = run_bench(wt)
-        if parsed is None:
-            return {
-                "commit": base, "prev_round": prev_n,
-                "drift_ratio": round(ratio, 2),
-                "error": "no JSON from prior bench",
-            }
-        # Re-measure HEAD in the ADJACENT subprocess window too. Round-7
-        # finding: this host's degradation is INTERMITTENT, not
-        # monotonic (anonymous page-fault throughput measured swinging
-        # 270 MB/s <-> 2.1 GB/s minutes apart), so "prior-now vs
-        # prior-committed" mislabels a lucky prior window as code-drift
-        # — it did exactly that this round (HEAD 35.9s in a bad window,
-        # prior 15.1s in a good one, identical dedup operator code).
-        # Only HEAD and prior measured back-to-back under the same
-        # conditions can attribute drift to code.
-        parsed_head = run_bench(str(root))
-
-        def min_of_passes(p: dict | None) -> float:
-            # Align semantics across bench.py versions: HEAD reports
-            # per-query min-of-passes; older commits reported the warm
-            # pass. Re-derive the min from any run that carries both
-            # passes so code_ratio compares like with like.
-            if not p:
-                return 0.0
-            qs, qc = p.get("queries") or {}, p.get("queries_cold") or {}
-            if qs and qc:
-                return round(
-                    sum(min(v, qc.get(n, v)) for n, v in qs.items()), 3
-                )
-            return float(p.get("value") or 0)
-
-        prior_now = min_of_passes(parsed)
-        head_now = min_of_passes(parsed_head)
-        verdict, code_ratio = _ab_verdict(total, prev_sum, prior_now, head_now)
-        return {
-            "commit": base,
-            "prev_round": prev_n,
-            "prev_committed_value": prev_sum,
-            "drift_ratio": round(ratio, 2),
-            "value": parsed.get("value"),
-            "queries": parsed.get("queries"),
-            "head_requote_value": head_now or None,
-            "head_requote_queries": (parsed_head or {}).get("queries"),
-            "code_ratio_same_window": round(code_ratio, 3) if code_ratio else None,
-            "verdict": verdict,
-            "note": (
-                "prior judging commit AND head re-benched back-to-back on "
-                "today's host; the verdict compares the two same-window "
-                "numbers (code_ratio_same_window), not either against its "
-                "committed value — host noise here is intermittent"
-            ),
-        }
-    except Exception as exc:  # noqa: BLE001
-        return {"commit": base, "drift_ratio": round(ratio, 2),
-                "error": repr(exc)[:300]}
-    finally:
-        try:
-            git("worktree", "remove", "--force", wt, timeout=120)
-        except Exception:  # noqa: BLE001
-            shutil.rmtree(wt, ignore_errors=True)
-
-
-def main() -> None:
-    sf_dir = os.getenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    registry = load_all()
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    queries: dict[str, float] = {}
+    for name in SENSOR_BATCH_MIX + LLM_MIX:
+        t0 = time.perf_counter()
+        df = registry[name].fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        queries[name] = round(time.perf_counter() - t0, 3)
     try:
         sf = float(Path(sf_dir).name.replace("sf", ""))
     except ValueError:
         sf = -1.0
-
-    from masd_spark.session import get_spark
-    from masd_spark.queries import load_all
-
-    spark = get_spark(app_name="masd-bench", driver_memory=os.getenv("MASD_DRIVER_MEMORY", "48g"))
-    registry = load_all()
-    headline = {n: s for n, s in registry.items() if s.headline}
-
-    # warm-up: JVM, parquet footer reads, codegen
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    # Two passes in ONE JVM (VERDICT r3 item 3): r02->r03 drifted ~1.45x
-    # uniformly across unrelated plans, which is the signature of warm-up/
-    # environment variance, not plan regressions. Reporting the WARM pass
-    # as the metric (and the cold pass + ratios alongside) separates the
-    # two: a query slow in BOTH passes is a real regression; one slow only
-    # cold is JVM/codegen/page-cache warm-up.
-    passes = max(1, int(os.getenv("MASD_BENCH_PASSES", "2")))
-    per_pass: list[dict[str, float]] = []
-    for _ in range(passes):
-        timings: dict[str, float] = {}
-        for name, spec in headline.items():
-            # build INSIDE the timed window: some operators eagerly
-            # materialize shared intermediates (e.g. the shingle set)
-            # during construction.
-            t0 = time.perf_counter()
-            df = spec.fn(spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
-        per_pass.append(timings)
-        # shared materialized intermediates (shingle cache) must not leak
-        # a warm copy into the next pass's first query
-        from masd_spark.queries.dedup import _SHINGLE_CACHE
-
-        _SHINGLE_CACHE.clear()
-        # ...and their localCheckpoint blocks must actually be RELEASED:
-        # the JVM frees them via ContextCleaner only after Python GC drops
-        # the DataFrame refs. Stale pass-1 blocks otherwise sit in executor
-        # storage memory through pass 2, inflating its dedup timings.
-        import gc
-
-        gc.collect()
-        spark.catalog.clearCache()
-
-    # Per-query min across the passes: the warm pass is normally the
-    # floor (pass 1 pays JVM/codegen/page-cache warm-up), so a warm time
-    # ABOVE the cold one is direct evidence the warm window was
-    # noise-inflated (this host's anonymous page-fault throughput swings
-    # 270 MB/s <-> 2.1 GB/s minutes apart). A genuine plan regression
-    # slows every pass, so min() never hides one — it only filters
-    # windows that one pass proves spurious.
-    timings = {
-        n: min(p.get(n, float("inf")) for p in per_pass) for n in per_pass[-1]
-    }
-
-    # Retry pass for bar-exceeders: this host has documented
-    # multi-second I/O stalls that can persist across BOTH passes (a
-    # 5x-inflated scan-bound q1 was observed right after a 10-min test
-    # run, vanishing on an idle host). A genuine plan regression
-    # reproduces on the third, freshly-timed run; a transient stall
-    # doesn't. min() over repeated runs of the same plan is the honest
-    # estimator of plan cost. Two triggers: the 2x-of-r01 regression
-    # bar, and (round-7 addition, after a noisy window put a
-    # 7x-inflated dedup_ngram_jaccard in the artifact untested because
-    # it still sat under 2x r01) a >1.5x drift above the SAME query's
-    # previous committed round value.
-    retried: dict[str, float] = {}
-    if abs(sf - 0.1) < 1e-9:
-        prev_q = _prev_committed_queries()
-        for name in R01_BASELINE:
-            now = timings.get(name, 0.0)
-            bar = REGRESSION_FACTOR * R01_BASELINE[name]
-            prev = prev_q.get(name)
-            if prev:
-                bar = min(bar, 1.5 * prev)
-            if now > bar:
-                t0 = time.perf_counter()
-                df = headline[name].fn(spark, sf_dir)
-                df.write.mode("overwrite").format("noop").save()
-                retried[name] = round(time.perf_counter() - t0, 3)
-                timings[name] = min(timings[name], retried[name])
-
-    total = round(sum(timings.values()), 3)
-    # regression check vs the r01 baseline (only meaningful at sf0.1, the
-    # scale the baseline was recorded at)
-    regressions: dict[str, dict[str, float]] = {}
-    if abs(sf - 0.1) < 1e-9:
-        for name, r01 in R01_BASELINE.items():
-            now = timings.get(name)
-            if now is not None and now > REGRESSION_FACTOR * r01:
-                regressions[name] = {"r01": r01, "now": now, "ratio": round(now / r01, 2)}
-        for name, r in regressions.items():
-            print(
-                f"[bench] REGRESSION {name}: {r['now']}s vs r01 {r['r01']}s "
-                f"({r['ratio']}x > {REGRESSION_FACTOR}x bar)",
-                file=sys.stderr,
-            )
-        deltas = {
-            n: round(timings[n] / R01_BASELINE[n], 2)
-            for n in R01_BASELINE
-            if n in timings
-        }
-        print(f"[bench] ratio vs r01 per query: {deltas}", file=sys.stderr)
-    out = {
-        "metric": "sum of headline query wall-times (noop sink, warm JVM)",
-        "value": total,
+    return {
+        "metric": "sum of batch-mix query wall-times (one cold pass, noop sink)",
+        "value": round(sum(queries.values()), 3),
         "unit": "sec",
-        "queries": timings,
+        "queries": queries,
         "sf": sf,
-        "regressions": regressions,
     }
-    if len(per_pass) > 1:
-        # Leak guard for the min() estimator: min() deliberately discards
-        # a slow warm pass as window noise, but warm >> cold is ALSO the
-        # signature of cross-pass state accumulation (leaked checkpoint
-        # blocks, cache residue). Surface it loudly instead of letting
-        # min() bury it.
-        skew = {
-            n: round(per_pass[-1][n] / per_pass[0][n], 2)
-            for n in per_pass[-1]
-            if per_pass[0].get(n) and per_pass[-1][n] > 2.0 * per_pass[0][n]
-        }
-        if skew:
-            out["pass_skew"] = skew
-            print(
-                f"[bench] PASS-SKEW (warm > 2x cold — host noise OR a "
-                f"cross-pass state leak; investigate if it repeats): {skew}",
-                file=sys.stderr,
-            )
-        out["queries_cold"] = per_pass[0]
-        # ratio against the ACTUAL warm pass (the last one), not the
-        # per-query min — when min() discards a noisy warm pass the
-        # cold/min ratio would read 1.0 (cold/cold) and stop measuring
-        # what this key's name promises (ADVICE r7).
-        out["cold_over_warm"] = {
-            n: round(per_pass[0][n] / per_pass[-1][n], 2)
-            if per_pass[-1].get(n)
-            else None
-            for n in timings
-        }
-        out["variance_note"] = (
-            "reported 'queries' = per-query MIN across the passes (one "
-            "JVM; pass 1 = 'queries_cold', pass 2 = warm). The warm pass "
-            "is normally the floor, so min() only differs when the warm "
-            "window was noise-inflated (this host's page-fault "
-            "throughput is intermittently degraded); a real plan "
-            "regression slows every pass and survives the min. Queries "
-            "exceeding 2x their r01 bar OR 1.5x their previous "
-            "committed round value get ONE retry (min taken); a "
-            "surviving entry in 'regressions' reproduced across runs."
-        )
-    if retried:
-        out["retried"] = retried
-    spark.stop()
-    ab = _maybe_ab_adjudicate(total, sf)
-    if ab is not None:
-        out["ab_prior_commit"] = ab
+
+
+def main() -> None:
+    sf_dir = os.getenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from masd_spark.session import get_spark
+
+    spark = get_spark(app_name="masd-bench")
+    try:
+        out = run(spark, sf_dir)
+    finally:
+        spark.stop()
     print(json.dumps(out))
 
 

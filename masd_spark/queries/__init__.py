@@ -39,16 +39,13 @@ class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None = None
-    headline: bool = False  # include in bench.py's per-round benchmark
     doc: str = ""
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(
-    name: str, oracle: str | None = None, headline: bool = False, doc: str = ""
-):
+def register(name: str, oracle: str | None = None, doc: str = ""):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             from masd_spark.session import ensure_io_confs
@@ -56,13 +53,7 @@ def register(
             ensure_io_confs(spark)  # driver-provided sessions lack our confs
             return fn(spark, sf_dir)
 
-        REGISTRY[name] = QuerySpec(
-            name,
-            wrapped,
-            oracle,
-            headline,
-            doc or (fn.__doc__ or ""),
-        )
+        REGISTRY[name] = QuerySpec(name, wrapped, oracle, doc or (fn.__doc__ or ""))
         return fn
 
     return deco

@@ -156,7 +156,6 @@ _JACCARD_UNCAPPED_ORACLE = f"""
 
 @register(
     "dedup_ngram_jaccard",
-    headline=True,
     oracle=_JACCARD_UNCAPPED_ORACLE,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,7 +379,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_containment_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dedup_containment_pairs`` with corpus-sized shingles (k=5) — the
-    SF1SWEEP_r07 measurement made containment the worst remaining
+    round-7 SF1 sweep made containment the worst remaining
     saturated-vocabulary outlier (18.9x warm wall-time on 10x data: the
     trigram candidate join touches every doc pair sharing any sub-cap
     shingle, and at SF1 that is most pairs). Same root-cause treatment
@@ -391,7 +390,8 @@ def dedup_containment_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle-match. A short doc quoted inside a long one keeps
     containment ~1.0 at any k; only sub-5-token coincidental overlap
     drops out. Registered against the uncapped k=5 oracle, cap
-    invariance re-proven per driver run, SF1-swept in SF1SWEEP_r{{N}}.
+    invariance re-proven per driver run (the SF1 sweep script and its
+    round-7 output are in git history at commit 789eb3a).
     (operators/dedup.py:containment_pairs)
     """
     docs = load_table(spark, sf_dir, "documents")
@@ -458,7 +458,7 @@ def _minhash_oracle(
     """
 
 
-@register("dedup_minhash_lsh", headline=True, oracle=_minhash_oracle())
+@register("dedup_minhash_lsh", oracle=_minhash_oracle())
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16)-LSH(4 bands) near-dup pairs, exact-Jaccard-verified at
     threshold 0.5. The scale path: signatures + banding are linear in the
@@ -512,7 +512,8 @@ def dedup_minhash_lsh_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Registered against the uncapped same-parameter oracle: every driver
     run re-proves the max_bucket=50 skip is a no-op on this corpus shape.
-    SF1 scaling is measured per-round in SF1SWEEP_r{N}.json.
+    Its SF1 scaling was measured by the round-7 SF1 sweep (the script
+    and its output are in git history at commit 789eb3a).
     (operators/dedup.py:minhash_lsh_pairs; ref consumer.py has no dedup —
     engine addition per the LLM-pipeline mandate.)
     """

@@ -45,7 +45,6 @@ def _sensor_readings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "masd_sensor_rollup",
-    headline=True,
     oracle=f"""
     WITH readings AS ({_ENRICH_SQL}),
     v AS (

@@ -62,7 +62,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 @register(
     "q1_pricing_summary",
-    headline=True,
     oracle="""
     SELECT l_returnflag, l_linestatus,
            CAST(CAST(round(SUM(CAST(l_quantity AS DECIMAL(18,6))), 2) AS DECIMAL(28,2)) AS DOUBLE) AS sum_qty,
@@ -110,7 +109,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q3_shipping_priority",
-    headline=True,
     oracle="""
     SELECT l_orderkey,
            CAST(CAST(round(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DECIMAL(28,2)) AS DOUBLE) AS revenue,
@@ -168,7 +166,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q5_nation_revenue",
-    headline=True,
     oracle="""
     SELECT n_name,
            CAST(CAST(round(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))), 2) AS DECIMAL(28,2)) AS DOUBLE) AS revenue
@@ -589,7 +586,6 @@ def json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sessionize_events",
-    headline=True,
     oracle="""
     WITH marked AS (
         SELECT user_id, epoch_ms(ts) AS ts_ms,
@@ -634,7 +630,6 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "asof_join_purchases",
-    headline=True,
     oracle="""
     WITH clicks AS (
         SELECT user_id, event_id, ts, value FROM events

@@ -31,7 +31,6 @@ def _queries_df(emb: DataFrame) -> DataFrame:
 
 @register(
     "ann_cosine_topk",
-    headline=True,
     oracle=valid_embeddings("""
     WITH q AS (
         SELECT vec_id AS query_id, embedding AS qv

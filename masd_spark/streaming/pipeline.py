@@ -13,8 +13,11 @@ warts (SURVEY.md §4.3):
    micro-batch: a single Spark job, no driver-side row transfer, scales
    with executors instead of stations.
 2. swallowed sink exceptions advancing the checkpoint (consumer.py:205-206,
-   at-most-once) -> error policy is explicit; default "fail" keeps
-   foreachBatch exactly-once-ish (batch retried, checkpoint not advanced).
+   at-most-once) -> error policy is explicit. With the default "fail" a
+   failed write re-raises, so the checkpoint does not advance and the
+   batch is retried. The sink is still at-least-once: if the process is
+   killed after the append but before the commit log records the batch,
+   the replayed batch is appended again (ROADMAP open item 2).
 
 Streaming-only semantics preserved: event-time watermark bounds state and
 drops late data (consumer.py:114-116); windows may be re-emitted across

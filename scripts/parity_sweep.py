@@ -7,13 +7,9 @@ bugs that only appear with more data — caps binding differently,
 overflow, skew-path behavior, window frames straddling more rows.
 
 Usage:
-    python scripts/parity_sweep.py [sf_dir] [--only a,b] [--skip a,b] [--exact] [--master url]
+    python scripts/parity_sweep.py [sf_dir] [--only a,b] [--skip a,b] [--master url]
 
-``--exact`` makes --only/--skip match full query names instead of
-substrings — required by shard drivers (sf1_full_sweep.py) that
-partition the registry by exact name lists (substring matching would
-silently duplicate e.g. ``dedup_minhash_lsh`` into the shard that
-owns ``dedup_minhash_lsh_scaled``).
+``--only``/``--skip`` take comma-separated substrings of query names.
 
 ``--master local-cluster[2,4,4096]`` runs the whole sweep under a real
 Master + two Worker JVMs (network shuffle, executor-side Python
@@ -41,15 +37,11 @@ for p in (str(REPO), str(REPO / "tests")):
 def main() -> int:
     argv = sys.argv[1:]
     flags = {"--only": None, "--skip": None, "--master": None}
-    exact = False
     args = []
     i = 0
     while i < len(argv):
         a = argv[i]
-        if a == "--exact":
-            exact = True
-            i += 1
-        elif a in flags:
+        if a in flags:
             if i + 1 >= len(argv):
                 print(f"error: {a} requires a value", file=sys.stderr)
                 return 2
@@ -94,15 +86,12 @@ def main() -> int:
     )
     reg = load_all()
     names = [n for n, s in reg.items() if s.oracle is not None]
-    # --only / --skip take comma-separated substrings (any-match), or
-    # exact full names under --exact
-    match = (lambda s, n: s == n) if exact else (lambda s, n: s in n)
     if only:
         subs = [s for s in only.split(",") if s]
-        names = [n for n in names if any(match(s, n) for s in subs)]
+        names = [n for n in names if any(s in n for s in subs)]
     if skip:
         subs = [s for s in skip.split(",") if s]
-        names = [n for n in names if not any(match(s, n) for s in subs)]
+        names = [n for n in names if not any(s in n for s in subs)]
 
     passed, failed = [], []
     for i, name in enumerate(names):

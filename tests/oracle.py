@@ -8,7 +8,6 @@ values). Stricter than a hash: on mismatch it reports sample differing rows.
 from __future__ import annotations
 
 import math
-import os
 from datetime import date, datetime
 from decimal import Decimal
 
@@ -24,12 +23,6 @@ def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     # slow queries; subprocess harnesses (test_local_cluster) parse stdout
     # line-markers, and a bar fragment left before the marker breaks them
     con.execute("SET enable_progress_bar=false")
-    # Parallel sweep shards (sf1_full_sweep.py) each open their own
-    # connection; without a cap every shard's DuckDB claims all cores and
-    # the shards thrash. No effect unless the driver sets the env var.
-    threads = os.getenv("MASD_ORACLE_THREADS")
-    if threads:
-        con.execute(f"SET threads={int(threads)}")
     for t in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"

@@ -2,7 +2,7 @@
 
 Everything else in the suite runs ``local[N]`` — one JVM, where shuffle is
 an in-process memory copy and task serialization never crosses a process
-boundary. This module runs the nine headline queries plus one
+boundary. This module runs the nine LOCAL_CLUSTER_QUERIES plus one
 transformWithStateInPandas streaming flow under ``local-cluster[2,4,4096]``
 (the in-sandbox analogue of the reference's YARN 3x2-core topology,
 /root/reference/compose/spark.yml:46-54): a real Master, two Worker JVMs,
@@ -22,6 +22,21 @@ import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+
+# The sensor rollup plus the batch companions' core operators, pinned as
+# a list: TPC-H aggregate and joins, sessionize, the as-of join, n-gram
+# and MinHash dedup, cosine top-k.
+LOCAL_CLUSTER_QUERIES = (
+    "masd_sensor_rollup",
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q5_nation_revenue",
+    "sessionize_events",
+    "asof_join_purchases",
+    "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
+    "ann_cosine_topk",
+)
 
 _SCRIPT = r"""
 import json, sys, tempfile
@@ -63,9 +78,8 @@ from oracle import compare_query
 REG = load_all()
 SF = "/root/testdata/sf0.01"
 headline_ok, headline_fail = [], []
-for name, spec in REG.items():
-    if not spec.headline:
-        continue
+for name in json.loads(sys.argv[1]):
+    spec = REG[name]
     try:
         if spec.oracle is not None:
             compare_query(spark, spec, SF)
@@ -247,7 +261,7 @@ def test_local_cluster_smoke():
     env = dict(os.environ)
     env["PYTHONPATH"] = f"{REPO}:{env.get('PYTHONPATH', '')}".rstrip(":")
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT, json.dumps(LOCAL_CLUSTER_QUERIES)],
         capture_output=True,
         text=True,
         timeout=540,

@@ -56,3 +56,15 @@ def test_entry_contract(spark):
     q, o = e.queries(), e.oracle_sql()
     assert set(o) <= set(q)
     assert "masd_sensor_rollup" in o
+
+
+def test_bench_run_contract(spark):
+    import bench
+
+    out = bench.run(spark, SF_SMOKE)
+    assert set(out) == {"metric", "value", "unit", "queries", "sf"}
+    mix = bench.SENSOR_BATCH_MIX + bench.LLM_MIX
+    assert set(out["queries"]) == set(mix) and len(mix) == 12
+    assert set(mix) <= set(REGISTRY)
+    assert out["value"] == round(sum(out["queries"].values()), 3)
+    assert out["unit"] == "sec" and out["sf"] == 0.001
