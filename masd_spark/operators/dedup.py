@@ -112,10 +112,6 @@ def shingle_rows(
     return out
 
 
-# backwards-compatible internal alias
-_shingle_rows = shingle_rows
-
-
 def span_duplication(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -53,15 +53,6 @@ def word_shingles(toks_col: str, k: int = 3) -> Column:
     )
 
 
-def with_shingles(df: DataFrame, text_col: str = "text", k: int = 3, out_col: str = "shingles") -> DataFrame:
-    """Attach a distinct k-word shingle array column."""
-    return (
-        df.withColumn("_toks", tokens(text_col))
-        .withColumn(out_col, word_shingles("_toks", k))
-        .drop("_toks")
-    )
-
-
 def token_count(text: Column | str) -> Column:
     """Whitespace token count (empty text -> 0)."""
     c = F.col(text) if isinstance(text, str) else text

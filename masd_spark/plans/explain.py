@@ -22,10 +22,6 @@ def physical_plan(df: DataFrame) -> str:
     return s
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle exchanges in the physical plan (broadcast
     exchanges excluded — the cheap kind — and ReusedExchange excluded —

@@ -2,9 +2,11 @@
 
 The driver's oracle can't run a streaming query, so these are rows-only —
 but the STREAM output is deterministic (seeded simulator, availableNow
-file stream, update-mode last-emission reduction), and
-tests/test_streaming.py proves it equals the batch twin of the same
-operators.
+file stream), and tests/test_streaming.py proves it equals the batch twin
+of the same operators. Every twin drains through the library's one keyed
+sink (``start_keyed_sink`` with its default ``batch_id``-stamped writer);
+update-mode twins read back the last emission per key, append-mode twins
+every row.
 """
 
 from __future__ import annotations
@@ -19,13 +21,28 @@ from pyspark.sql import functions as F
 from masd_spark.queries import register, scratch_path
 from masd_spark.sources.simulator import SimulatorConfig, write_json_drops
 from masd_spark.streaming.pipeline import (
+    last_emission,
     read_file_sensor_stream,
     sensor_pipeline,
     start_keyed_sink,
 )
 
 
-_KEY_COLS = ["window_start_ms", "station_id", "station_name", "sensor_id"]
+def _drain(
+    spark: SparkSession, out: DataFrame, workdir: str, key_col: str, output_mode: str
+) -> DataFrame:
+    """Drain ``out`` (availableNow) into a keyed sink under ``workdir`` and
+    read every stamped row back."""
+    sink_dir = os.path.join(workdir, "sink")
+    start_keyed_sink(
+        out,
+        path=sink_dir,
+        checkpoint_dir=os.path.join(workdir, "ckpt"),
+        key_col=key_col,
+        output_mode=output_mode,
+        available_now=True,
+    ).awaitTermination(600)
+    return spark.read.parquet(sink_dir)
 
 
 @register("streaming_masd_rollup")
@@ -34,68 +51,35 @@ def streaming_masd_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark -> windowed metrics -> foreachBatch), reduced to the last
     emission per (window, station, sensor) — i.e. the document set the
     keyed sink would hold after an upsert. The upsert reduction is itself
-    Spark-side: micro-batches land in parquet stamped with ``batch_id``,
-    and a window (`row_number` over batch_id desc) keeps the latest row
-    per key — no driver collect() anywhere, the same pattern an upsert
-    sink uses at scale. ``sf_dir`` selects nothing (input is the seeded
-    simulator); kept for the harness signature.
+    Spark-side (``last_emission`` over the ``batch_id``-stamped sink) — no
+    driver collect() anywhere, the same pattern an upsert sink uses at
+    scale. ``sf_dir`` selects nothing (input is the seeded simulator);
+    kept for the harness signature.
     """
-    from pyspark.sql import Window
-
     workdir = tempfile.mkdtemp(prefix="masd_stream_q_", dir=scratch_path(""))
     src = os.path.join(workdir, "drops")
-    sink_dir = os.path.join(workdir, "sink")
     try:
         cfg = SimulatorConfig(duration_ms=120_000, seed=13)
         write_json_drops(src, cfg, n_files=3)
-
-        def write_batch(batch_df: DataFrame, batch_id: int, _path: str) -> None:
-            (
-                batch_df.select(
-                    F.unix_millis("window.start").alias("window_start_ms"),
-                    "station_id",
-                    "station_name",
-                    "sensor_id",
-                    "total_count",
-                    "valid_count",
-                    "malformed_count",
-                    "avg_val",
-                    "min_val",
-                    "max_val",
-                )
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(sink_dir)
-            )
-
         agg = sensor_pipeline(
             read_file_sensor_stream(spark, src),
             watermark_delay="10 minutes",
             nest=False,
         )
-        q = start_keyed_sink(
-            agg,
-            path=sink_dir,
-            checkpoint_dir=os.path.join(workdir, "ckpt"),
-            available_now=True,
-            write_batch=write_batch,
-        )
-        q.awaitTermination(600)
-
-        w = Window.partitionBy(*_KEY_COLS).orderBy(F.col("batch_id").desc())
-        latest = (
-            spark.read.parquet(sink_dir)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                *_KEY_COLS,
-                "total_count",
-                "valid_count",
-                "malformed_count",
-                F.round("avg_val", 6).alias("avg_val"),
-                "min_val",
-                "max_val",
-            )
+        sink = _drain(spark, agg, workdir, "station_id", "update")
+        latest = last_emission(
+            sink, ["window", "station_id", "station_name", "sensor_id"]
+        ).select(
+            F.unix_millis("window.start").alias("window_start_ms"),
+            "station_id",
+            "station_name",
+            "sensor_id",
+            "total_count",
+            "valid_count",
+            "malformed_count",
+            F.round("avg_val", 6).alias("avg_val"),
+            "min_val",
+            "max_val",
         )
         # materialize before the tempdir (the parquet source) is removed
         return latest.localCheckpoint(eager=True)
@@ -110,82 +94,31 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-right transformWithStateInPandas MapState version (point
     reads/writes per touched sensor against the RocksDB state store; the
     vendored protobuf shim satisfies the TWS state protocol where no real
-    wheel exists); the GroupState full-blob twin is the fallback when TWS
-    prerequisites are absent. Tests pin both to the same batch-twin
-    semantics. Last emission per station after the seeded availableNow
-    stream drains equals the batch top-k over full history.
+    wheel exists). Last emission per station after the seeded
+    availableNow stream drains equals the batch top-k over full history.
     """
     from masd_spark.operators.validate import classify_validity
     from masd_spark.streaming.stateful import (
+        rocksdb_state_store,
         streaming_station_heavy_hitters,
-        streaming_station_heavy_hitters_gs,
     )
     from masd_spark.vendor import ensure_protobuf_on_session
 
-    try:
-        ensure_protobuf_on_session(spark)
-        import google.protobuf  # noqa: F401
-
-        use_tws = True
-    except ImportError:
-        use_tws = False
-
+    ensure_protobuf_on_session(spark)
     workdir = tempfile.mkdtemp(prefix="masd_hh_q_", dir=scratch_path(""))
     src = os.path.join(workdir, "drops")
-    sink_dir = os.path.join(workdir, "sink")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    saved_provider = spark.conf.get(provider_key, None)
     try:
         cfg = SimulatorConfig(duration_ms=120_000, seed=13)
         write_json_drops(src, cfg, n_files=3)
-
         stream = classify_validity(read_file_sensor_stream(spark, src))
-        if use_tws:
-            spark.conf.set(
-                provider_key,
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
+        with rocksdb_state_store(spark):
             out = streaming_station_heavy_hitters(stream, k=3)
-        else:
-            out = streaming_station_heavy_hitters_gs(stream, k=3)
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(sink_dir)
-            )
-
-        q = (
-            out.writeStream.foreachBatch(write_batch)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("station_id", "rank").orderBy(
-            F.col("batch_id").desc()
-        )
-        latest = (
-            spark.read.parquet(sink_dir)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("station_id", "rank", "sensor_id", "n_valid")
+            sink = _drain(spark, out, workdir, "station_id", "update")
+        latest = last_emission(sink, ["station_id", "rank"]).select(
+            "station_id", "rank", "sensor_id", "n_valid"
         )
         return latest.localCheckpoint(eager=True)
     finally:
-        if saved_provider is None:
-            try:
-                spark.conf.unset(provider_key)
-            except Exception:
-                pass
-        else:
-            spark.conf.set(provider_key, saved_provider)
         shutil.rmtree(workdir, ignore_errors=True)
 
 
@@ -205,8 +138,6 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate), not history; the downstream count is an ordinary incremental
     streaming agg. ``sf_dir`` selects nothing (seeded generator input).
     """
-    import shutil as _shutil
-
     from masd_spark.operators.validate import (
         classify_validity,
         with_event_time_ms,
@@ -214,12 +145,11 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     workdir = tempfile.mkdtemp(prefix="masd_sdq_", dir=scratch_path(""))
     src = os.path.join(workdir, "drops")
-    sink_dir = os.path.join(workdir, "sink")
     try:
         cfg = SimulatorConfig(duration_ms=60_000, seed=29)
         write_json_drops(src, cfg, n_files=3)
         # simulate at-least-once: the whole first drop arrives again
-        _shutil.copyfile(
+        shutil.copyfile(
             os.path.join(src, "drop_000.json"),
             os.path.join(src, "drop_redelivered.json"),
         )
@@ -234,37 +164,13 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_readings"),
             F.sum(F.col("is_valid").cast("long")).alias("n_valid"),
         )
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(sink_dir)
-            )
-
-        q = (
-            counts.writeStream.foreachBatch(write_batch)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("station_id", "sensor_id").orderBy(
-            F.col("batch_id").desc()
-        )
-        latest = (
-            spark.read.parquet(sink_dir)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("station_id", "sensor_id", "n_readings", "n_valid")
+        sink = _drain(spark, counts, workdir, "station_id", "update")
+        latest = last_emission(sink, ["station_id", "sensor_id"]).select(
+            "station_id", "sensor_id", "n_readings", "n_valid"
         )
         return latest.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(workdir, ignore_errors=True)
+        shutil.rmtree(workdir, ignore_errors=True)
 
 
 @register("streaming_timer_sessions")
@@ -283,7 +189,7 @@ def streaming_timer_sessions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from masd_spark.operators.validate import with_event_time_ms
     from masd_spark.streaming.stateful import (
-        TSESS_OUTPUT_SCHEMA,  # noqa: F401  (schema contract documented there)
+        rocksdb_state_store,
         streaming_timer_sessions,
     )
     from masd_spark.vendor import ensure_protobuf_on_session
@@ -308,43 +214,22 @@ def streaming_timer_sessions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     workdir = tempfile.mkdtemp(prefix="masd_tsess_q_", dir=scratch_path(""))
     src = os.path.join(workdir, "drops")
-    sink_dir = os.path.join(workdir, "sink")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    saved_provider = spark.conf.get(provider_key, None)
     try:
         os.makedirs(src)
         for i, rows in enumerate(files):
             with open(os.path.join(src, f"f{i}.json"), "w") as fh:
                 for r in rows:
                     fh.write(_json.dumps(r) + "\n")
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
         stream = with_event_time_ms(read_file_sensor_stream(spark, src))
-        out = streaming_timer_sessions(
-            stream.withWatermark("event_time", "1 second"), gap_ms=30_000
-        )
-        q = (
-            out.writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("append").parquet(sink_dir)
+        with rocksdb_state_store(spark):
+            out = streaming_timer_sessions(
+                stream.withWatermark("event_time", "1 second"), gap_ms=30_000
             )
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-        return spark.read.parquet(sink_dir).localCheckpoint(eager=True)
+            sink = _drain(spark, out, workdir, "station_id", "append")
+        return sink.select(
+            "station_id", "session_start", "session_end", "n_events"
+        ).localCheckpoint(eager=True)
     finally:
-        if saved_provider is None:
-            try:
-                spark.conf.unset(provider_key)
-            except Exception:
-                pass
-        else:
-            spark.conf.set(provider_key, saved_provider)
         shutil.rmtree(workdir, ignore_errors=True)
 
 
@@ -370,45 +255,18 @@ def streaming_sensor_ewma_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     workdir = tempfile.mkdtemp(prefix="masd_ewma_q_", dir=scratch_path(""))
     src = os.path.join(workdir, "drops")
-    sink_dir = os.path.join(workdir, "sink")
     try:
         cfg = SimulatorConfig(duration_ms=120_000, seed=13)
         write_json_drops(src, cfg, n_files=3, split="time")
 
         stream = classify_validity(read_file_sensor_stream(spark, src))
         out = streaming_sensor_ewma(stream, alpha=0.3)
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(sink_dir)
-            )
-
-        q = (
-            out.writeStream.foreachBatch(write_batch)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("station_id", "sensor_id").orderBy(
-            F.col("batch_id").desc()
-        )
-        latest = (
-            spark.read.parquet(sink_dir)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(
-                "station_id",
-                "sensor_id",
-                "n_valid",
-                F.round("ewma", 6).alias("ewma"),
-            )
+        sink = _drain(spark, out, workdir, "station_id", "update")
+        latest = last_emission(sink, ["station_id", "sensor_id"]).select(
+            "station_id",
+            "sensor_id",
+            "n_valid",
+            F.round("ewma", 6).alias("ewma"),
         )
         return latest.localCheckpoint(eager=True)
     finally:
@@ -477,16 +335,9 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (c["user_id"] == p["user_id"]),
         ).select(c["user_id"], "c_ts", "p_ts", "amount")
 
-        sink_dir = os.path.join(workdir, "sink")
-        q = (
-            joined.writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("append").parquet(sink_dir)
-            )
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        sink = _drain(spark, joined, workdir, "user_id", "append")
+        return sink.select("user_id", "c_ts", "p_ts", "amount").localCheckpoint(
+            eager=True
         )
-        q.awaitTermination(600)
-        return spark.read.parquet(sink_dir).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)

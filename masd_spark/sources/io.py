@@ -137,9 +137,9 @@ def mongo_keyed_batch_writer(
 
         # foreachBatch DataFrames are NOT auto-cached: without a cache the
         # batch lineage would recompute once for the distinct-keys collect
-        # and once more per key written. start_keyed_sink already persists
-        # the batch before delegating — only add our own cache when the
-        # caller didn't, so large batches never hold two cached copies.
+        # and once more per key written. start_keyed_sink hands the batch
+        # over uncached — only add our own cache when the caller didn't
+        # already, so large batches never hold two cached copies.
         own_persist = not batch_df.is_cached
         if own_persist:
             batch_df.persist()

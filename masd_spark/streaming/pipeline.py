@@ -17,7 +17,9 @@ warts (SURVEY.md §4.3):
    failed write re-raises, so the checkpoint does not advance and the
    batch is retried. The sink is still at-least-once: if the process is
    killed after the append but before the commit log records the batch,
-   the replayed batch is appended again (ROADMAP open item 2).
+   the replayed batch is appended again (ROADMAP open item 2). The
+   default writer stamps every row with its ``batch_id``, so
+   :func:`last_emission` reads back the latest row per key.
 
 Streaming-only semantics preserved: event-time watermark bounds state and
 drops late data (consumer.py:114-116); windows may be re-emitted across
@@ -36,7 +38,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -58,7 +60,7 @@ def read_kafka_sensor_stream(
 ) -> DataFrame:
     """Kafka source by topic pattern (reference: consumer.py:83-90).
     Requires the spark-sql-kafka package on the classpath; in this
-    container there is no Kafka, so tests use the file/rate sources below
+    container there is no Kafka, so tests use the file source below
     — the downstream pipeline is identical.
     """
     return (
@@ -80,24 +82,6 @@ def read_file_sensor_stream(
         spark.readStream.schema(SENSOR_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(path)
-    )
-
-
-def rate_sensor_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Synthetic load source: rate -> sensor-reading shape (value malformed
-    for ~5% of rows). Useful for soak/throughput tests without Kafka.
-    """
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", rows_per_second
-    ).load()
-    return rate.select(
-        F.lit("Perugia").alias("station_name"),
-        F.lit("perugia").alias("station_id"),
-        (F.col("value") % 15).cast("string").alias("sensor_id"),
-        F.unix_millis(F.col("timestamp")).alias("timestamp"),
-        F.when(F.col("value") % 20 == 0, F.lit("<<bad_data>>"))
-        .otherwise((F.col("value") % 100).cast("string"))
-        .alias("value"),
     )
 
 
@@ -130,7 +114,7 @@ def sensor_pipeline(
 
 def parse_kafka_sensor_stream(raw: DataFrame) -> DataFrame:
     """Kafka binary envelope -> typed readings (reference:
-    consumer.py:100-102); file/rate sources skip this step."""
+    consumer.py:100-102); the file source skips this step."""
     return parse_json_records(raw, SENSOR_SCHEMA, value_col="value")
 
 
@@ -147,9 +131,16 @@ def start_keyed_sink(
 ) -> StreamingQuery:
     """foreachBatch sink writing every micro-batch as ONE partitioned job
     (partition column derived from ``key_col``), replacing the reference's
-    per-station loop. ``on_error='fail'`` re-raises so the checkpoint
-    doesn't advance past a failed write (the reference logs and loses the
-    batch instead).
+    per-station loop.
+
+    The writer runs once per micro-batch, empty ones included, and is the
+    batch's only job. The default writer appends every row stamped with
+    its ``batch_id`` under ``sink_key=<key>`` directories, so a replayed
+    or re-emitted key can be resolved by :func:`last_emission`.
+    ``on_error='fail'`` re-raises so the checkpoint doesn't advance past a
+    failed write (the reference logs and loses the batch instead);
+    ``'skip'`` logs the failure and still runs the batch's plan once, so a
+    stateful query commits its state and carries on.
     """
     if on_error not in ("fail", "skip"):
         # anything else would silently become at-most-once batch skipping
@@ -158,7 +149,8 @@ def start_keyed_sink(
 
     def _default_write(batch_df: DataFrame, batch_id: int, out_path: str) -> None:
         (
-            batch_df.withColumn("sink_key", F.col(key_col))
+            batch_df.withColumn("batch_id", F.lit(batch_id))
+            .withColumn("sink_key", F.col(key_col))
             .write.mode("append")
             .partitionBy("sink_key")
             .parquet(out_path)
@@ -167,22 +159,18 @@ def start_keyed_sink(
     writer = write_batch or _default_write
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch DataFrames are NOT auto-cached: without persist,
-        # the isEmpty() probe and the write would each run the full
-        # micro-batch plan (shuffle + agg) — doubling per-trigger compute
-        batch_df.persist()
         try:
-            if batch_df.isEmpty():
-                return
-            try:
-                writer(batch_df, batch_id, path)
-            except Exception:
-                if on_error == "fail":
-                    raise
-                # "skip": reference behavior (consumer.py:205-206) — log only
-                print(f"[masd_spark] WARN batch {batch_id} sink failed; skipped")
-        finally:
-            batch_df.unpersist()
+            writer(batch_df, batch_id, path)
+        except Exception:
+            if on_error == "fail":
+                raise
+            # "skip": reference behavior (consumer.py:205-206) — log only
+            print(f"[masd_spark] WARN batch {batch_id} sink failed; skipped")
+            # a stateful batch commits its state only once every state
+            # partition has run; a writer that failed before (or midway
+            # through) its job left that undone, and Spark would fail the
+            # query at its next batch
+            batch_df.write.format("noop").mode("overwrite").save()
 
     ws = aggregated.writeStream.foreachBatch(handle).outputMode(output_mode).option(
         "checkpointLocation", checkpoint_dir
@@ -192,3 +180,15 @@ def start_keyed_sink(
     elif trigger_interval:
         ws = ws.trigger(processingTime=trigger_interval)
     return ws.start()
+
+
+def last_emission(sink: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """The row with the highest ``batch_id`` per ``keys`` of a stamped sink
+    read back (``start_keyed_sink``'s default writer) — the document set an
+    upsert sink would hold once every micro-batch has landed."""
+    w = Window.partitionBy(*keys).orderBy(F.col("batch_id").desc())
+    return (
+        sink.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )

@@ -20,7 +20,15 @@ by timestamp itself.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
+
+_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
 EWMA_OUTPUT_SCHEMA = (
     "station_id string, sensor_id string, n_valid long, ewma double"
@@ -75,7 +83,23 @@ def streaming_sensor_ewma(readings: DataFrame, alpha: float = 0.3) -> DataFrame:
 
 
 HH_OUTPUT_SCHEMA = "station_id string, sensor_id string, n_valid long, rank long"
-HH_STATE_SCHEMA = "sensors array<string>, counts array<long>"
+
+
+@contextmanager
+def rocksdb_state_store(spark: SparkSession) -> Iterator[None]:
+    """Run the enclosed block with the RocksDB state-store provider, which
+    the transformWithStateInPandas operators below require, then restore
+    the session's previous provider (a new stream checkpoint pins the
+    provider it was started with)."""
+    saved = spark.conf.get(_PROVIDER_KEY, None)
+    spark.conf.set(_PROVIDER_KEY, _ROCKSDB_PROVIDER)
+    try:
+        yield
+    finally:
+        if saved is None:
+            spark.conf.unset(_PROVIDER_KEY)
+        else:
+            spark.conf.set(_PROVIDER_KEY, saved)
 
 
 def streaming_station_heavy_hitters(
@@ -99,10 +123,7 @@ def streaming_station_heavy_hitters(
     JVM state server. Where no protobuf wheel exists the vendored shim
     (masd_spark/vendor/pbshim) provides the wire format — the JVM parses
     its bytes with real protobuf, so the shim is integration-verified by
-    this operator's test. :func:`streaming_station_heavy_hitters_gs` is
-    the semantically identical GroupState twin (full state blob per key
-    per trigger — fine for bounded per-key maps, the wrong shape at
-    million-key cardinality).
+    this operator's test. Run it inside :func:`rocksdb_state_store`.
 
     ``initial_counts`` (optional) bootstraps the state from a BATCH
     aggregate — a ``GroupedData`` keyed like the stream (station_id)
@@ -156,8 +177,7 @@ def streaming_station_heavy_hitters(
             for pdf in rows:
                 # notna: a valid reading with a null sensor_id cannot key a
                 # MapState entry (and pandas value_counts drops NaN anyway
-                # — make the exclusion explicit, mirrored in the GroupState
-                # twin and the batch oracle)
+                # — make the exclusion explicit, mirrored in the batch oracle)
                 valid = pdf[pdf["is_valid"] & pdf["sensor_id"].notna()]
                 for s, c in valid["sensor_id"].value_counts().items():
                     inc[s] = inc.get(s, 0) + int(c)
@@ -190,51 +210,6 @@ def streaming_station_heavy_hitters(
         outputMode="Update",
         timeMode="None",
         initialState=initial_counts,
-    )
-
-
-def streaming_station_heavy_hitters_gs(readings: DataFrame, k: int = 3) -> DataFrame:
-    """GroupState twin of :func:`streaming_station_heavy_hitters`: same
-    semantics (running top-k valid-reading sensors per station), state
-    carried as parallel sensors/counts arrays in one GroupState blob —
-    read and rewritten whole each trigger, which is fine while per-key
-    sensor cardinality is bounded and is exactly the cost the MapState
-    version avoids at scale.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdf_iter, state: GroupState):
-        if state.exists:
-            sensors, counts = state.get
-            tally = dict(zip(sensors, counts))
-        else:
-            tally = {}
-        for pdf in pdf_iter:
-            valid = pdf[pdf["is_valid"] & pdf["sensor_id"].notna()]
-            for s, c in valid["sensor_id"].value_counts().items():
-                tally[s] = tally.get(s, 0) + int(c)
-        state.update((list(tally), [tally[s] for s in tally]))
-        top = sorted(tally.items(), key=lambda t: (-t[1], t[0]))[:k]
-        if top:
-            yield pd.DataFrame(
-                [
-                    {
-                        "station_id": key[0],
-                        "sensor_id": s,
-                        "n_valid": n,
-                        "rank": i + 1,
-                    }
-                    for i, (s, n) in enumerate(top)
-                ]
-            )
-
-    return readings.groupBy("station_id").applyInPandasWithState(
-        update,
-        HH_OUTPUT_SCHEMA,
-        HH_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
     )
 
 

@@ -93,22 +93,12 @@ for name in json.loads(sys.argv[1]):
 tws_ok, tws_err = False, None
 try:
     from test_streaming import _run_heavy_hitters
-    from masd_spark.streaming.stateful import streaming_station_heavy_hitters
 
+    # the helper runs under the RocksDB provider (TWS state uses multiple
+    # column families; HDFS-backed raises UNSUPPORTED_FEATURE), same as the
+    # local[8] test; under local-cluster the stores live on executors.
     tmp = Path(tempfile.mkdtemp(prefix="lc_tws_"))
-    last, expected = _run_heavy_hitters(
-        spark,
-        tmp,
-        streaming_station_heavy_hitters,
-        extra_confs={
-            # TWS state uses multiple column families -> RocksDB provider
-            # (HDFS-backed raises UNSUPPORTED_FEATURE), same as the local[8]
-            # test; under local-cluster the stores live on executors.
-            "spark.sql.streaming.stateStore.providerClass":
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-        },
-    )
+    last, expected = _run_heavy_hitters(spark, tmp)
     assert last == expected, f"TWS mismatch: {last} != {expected}"
     tws_ok = True
 except Exception as exc:  # noqa: BLE001

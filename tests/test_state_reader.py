@@ -94,37 +94,16 @@ def test_read_tws_map_state_by_var_name(spark, tmp_path):
     ensure_protobuf()
     pytest.importorskip("google.protobuf")
     from masd_spark.sources.simulator import generate_readings
-    from masd_spark.streaming.stateful import streaming_station_heavy_hitters
+    from masd_spark.streaming.stateful import rocksdb_state_store
     from test_streaming import SimulatorConfig, _run_heavy_hitters
 
-    provider = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    _run_heavy_hitters(
-        spark,
-        tmp_path,
-        streaming_station_heavy_hitters,
-        extra_confs={
-            "spark.sql.streaming.stateStore.providerClass": provider,
-        },
-    )
-
-    saved = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-    try:
+    _run_heavy_hitters(spark, tmp_path)
+    with rocksdb_state_store(spark):
         df = read_state(
             spark,
             str(tmp_path / "hh_ckpt"),
             state_var_name="sensor_counts",
         )
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", saved
-            )
 
     rows = df.collect()
     assert rows, "no TWS map-state rows read back"

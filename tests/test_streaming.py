@@ -10,10 +10,12 @@ from pyspark.sql import functions as F
 
 from masd_spark.sources.simulator import SimulatorConfig, readings_df, write_json_drops
 from masd_spark.streaming.pipeline import (
+    last_emission,
     read_file_sensor_stream,
     sensor_pipeline,
     start_keyed_sink,
 )
+from masd_spark.streaming.stateful import rocksdb_state_store
 
 CFG = SimulatorConfig(duration_ms=120_000, seed=7)  # 2 one-minute windows
 
@@ -67,6 +69,49 @@ def test_stream_matches_batch_twin(spark, tmp_path):
         for r in batch.collect()
     }
     assert last_emission == expected
+
+
+def test_default_keyed_sink_matches_batch_twin(spark, tmp_path):
+    """The library's own writer: every row lands stamped with its batch_id
+    under one sink_key= directory per station, and the last emission per
+    key read back from the sink equals the batch pipeline."""
+    src = str(tmp_path / "drops")
+    assert write_json_drops(src, CFG, n_files=3) > 0
+    out = tmp_path / "out"
+    agg = sensor_pipeline(
+        read_file_sensor_stream(spark, src), watermark_delay="10 minutes", nest=False
+    )
+    q = start_keyed_sink(
+        agg,
+        path=str(out),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        key_col="station_id",
+        available_now=True,
+    )
+    q.awaitTermination(300)
+
+    sink = spark.read.parquet(str(out))
+    assert sink.filter(F.col("batch_id").isNull()).count() == 0
+    batch = sensor_pipeline(readings_df(spark, CFG), nest=False)
+    stations = {r["station_id"] for r in batch.select("station_id").distinct().collect()}
+    assert {
+        p.name.split("=", 1)[1] for p in out.iterdir() if p.name.startswith("sink_key=")
+    } == stations
+
+    def keyed(rows):
+        return {
+            (r["window"]["start"], r["station_id"], r["sensor_id"]): (
+                r["total_count"],
+                r["valid_count"],
+                r["malformed_count"],
+                None if r["avg_val"] is None else round(r["avg_val"], 9),
+            )
+            for r in rows
+        }
+
+    got = last_emission(sink, ["window", "station_id", "sensor_id"]).collect()
+    assert len(got) == len(keyed(got))
+    assert keyed(got) == keyed(batch.collect())
 
 
 def test_sliding_window_stream_matches_batch_twin(spark, tmp_path):
@@ -586,24 +631,21 @@ def test_partition_counts_follow_default_parallelism(spark, tmp_path):
     assert metadata["conf"]["spark.sql.shuffle.partitions"] == n
 
 
-def _run_heavy_hitters(spark, tmp_path, op, extra_confs=None):
-    """Drive a heavy-hitters streaming operator over file drops and return
+def _run_heavy_hitters(spark, tmp_path):
+    """Drive the TWS heavy-hitters operator over file drops and return
     (final emitted top-k per station, batch-twin expectation)."""
     from masd_spark.operators.validate import classify_validity
     from masd_spark.sources.simulator import generate_readings
+    from masd_spark.streaming.stateful import streaming_station_heavy_hitters
 
-    saved = {}
-    for key, val in (extra_confs or {}).items():
-        saved[key] = spark.conf.get(key, None)
-        spark.conf.set(key, val)
-    try:
+    with rocksdb_state_store(spark):
         cfg = SimulatorConfig(duration_ms=30_000, seed=13)
         src = str(tmp_path / "hh_drops")
         n = write_json_drops(src, cfg, n_files=3)
         assert n > 0
 
         stream = classify_validity(read_file_sensor_stream(spark, src))
-        out = op(stream, k=3)
+        out = streaming_station_heavy_hitters(stream, k=3)
 
         collected: list = []
         q = (
@@ -616,12 +658,6 @@ def _run_heavy_hitters(spark, tmp_path, op, extra_confs=None):
             .start()
         )
         q.awaitTermination(300)
-    finally:
-        for key, val in saved.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
 
     last: dict = {}  # station -> {rank: (sensor, n_valid)}
     for bid, rows in sorted(collected, key=lambda x: x[0]):
@@ -683,17 +719,6 @@ def test_streaming_dedup_matches_batch_twin(spark):
     assert got == expected
 
 
-def test_group_state_heavy_hitters(spark, tmp_path):
-    """applyInPandasWithState heavy-hitters twin: final running top-k must
-    equal the batch twin over the full history."""
-    from masd_spark.streaming.stateful import streaming_station_heavy_hitters_gs
-
-    last, expected = _run_heavy_hitters(
-        spark, tmp_path, streaming_station_heavy_hitters_gs
-    )
-    assert last == expected
-
-
 def test_transform_with_state_heavy_hitters(spark, tmp_path):
     """transformWithStateInPandas MapState operator (needs protobuf for
     the TWS state protocol + RocksDB state store). The vendored shim
@@ -703,18 +728,8 @@ def test_transform_with_state_heavy_hitters(spark, tmp_path):
 
     ensure_protobuf()
     pytest.importorskip("google.protobuf")
-    from masd_spark.streaming.stateful import streaming_station_heavy_hitters
 
-    last, expected = _run_heavy_hitters(
-        spark,
-        tmp_path,
-        streaming_station_heavy_hitters,
-        extra_confs={
-            "spark.sql.streaming.stateStore.providerClass":
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-        },
-    )
+    last, expected = _run_heavy_hitters(spark, tmp_path)
     assert last == expected
 
 
@@ -852,14 +867,7 @@ def test_timer_sessions_silent_key_flush(spark, tmp_path):
             for r in rows:
                 fh.write(_json.dumps(r) + "\n")
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         stream = with_event_time_ms(read_file_sensor_stream(spark, src))
         out = streaming_timer_sessions(
             stream.withWatermark("event_time", "1 second"), gap_ms=gap
@@ -875,11 +883,6 @@ def test_timer_sessions_silent_key_flush(spark, tmp_path):
             .start()
         )
         q.awaitTermination(300)
-    finally:
-        if saved is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, saved)
 
     got = {
         (r["station_id"], r["session_start"], r["session_end"], r["n_events"])
@@ -937,14 +940,7 @@ def test_transform_with_state_initial_state_bootstrap(spark, tmp_path):
         .groupBy("station_id")
     )
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         stream = classify_validity(read_file_sensor_stream(spark, src))
         out = streaming_station_heavy_hitters(stream, k=3, initial_counts=initial)
         collected: list = []
@@ -958,11 +954,6 @@ def test_transform_with_state_initial_state_bootstrap(spark, tmp_path):
             .start()
         )
         q.awaitTermination(300)
-    finally:
-        if saved is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, saved)
 
     last: dict = {}
     for bid, rows in sorted(collected, key=lambda x: x[0]):
@@ -1260,14 +1251,7 @@ def test_timer_sessions_late_events_and_null_timestamps(spark, tmp_path):
                 fh.write(_json.dumps(r) + "\n")
         _time.sleep(0.05)
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_store(spark):
         stream = with_event_time_ms(read_file_sensor_stream(spark, src))
         out = streaming_timer_sessions(
             stream.withWatermark("event_time", "5 minutes"), gap_ms=gap
@@ -1283,11 +1267,6 @@ def test_timer_sessions_late_events_and_null_timestamps(spark, tmp_path):
             .start()
         )
         q.awaitTermination(300)
-    finally:
-        if saved is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, saved)
 
     got = {
         (r["station_id"], r["session_start"], r["session_end"], r["n_events"])
