@@ -309,7 +309,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             mid = len(rows) // 2
             for i, chunk in enumerate([rows[:mid], rows[mid:]]):
                 with open(os.path.join(d, f"f{i}.json"), "w") as fh:
-                    for r in rows[:mid] if i == 0 else rows[mid:]:
+                    for r in chunk:
                         fh.write(_json.dumps(r) + "\n")
 
         def src(d, schema, tcol):

@@ -4,8 +4,9 @@ The reference builds a bare session with only Mongo connector configs
 (reference: spark-app/consumer.py:55-64). Our engine pins the configs that
 matter for correctness parity (UTC timezone, ns-timestamp handling) and for
 scale (AQE, skew-join handling). Partition counts are not pinned: they are
-derived from the live session's ``defaultParallelism`` in one place,
-``ensure_io_confs``.
+derived from the live session in one place. ``ensure_io_confs`` sizes the
+batch counts from ``defaultParallelism``; ``state_partitions`` sizes a new
+keyed-sink stream's state store (one partition per executor).
 """
 
 from __future__ import annotations
@@ -83,15 +84,16 @@ RUNTIME_CONFS: dict[str, str] = {
 def ensure_io_confs(spark: SparkSession) -> SparkSession:
     """Apply our confs to an existing session (e.g. the driver's).
 
-    Every partition count is sized here, from the live session's
-    ``defaultParallelism``: ``shuffle.partitions`` (also the state-store
-    partition count a new stream checkpoint is created with) and the
+    The batch partition counts are sized here, from the live session's
+    ``defaultParallelism``: ``shuffle.partitions`` and the
     ``files.minPartitionNum`` scan-split floor, which only lowers the
     split size (maxSplitBytes = min(maxPartitionBytes, max(openCost,
     bytes/N))) and so is a no-op once bytes/N >> 128 MB. RUNTIME_CONFS
     is applied after them, so a caller's entry for either key wins.
     ``register`` re-runs this per query call, so on ``local-cluster`` the
-    count is read after the executors have registered.
+    count is read after the executors have registered. A stream started
+    through ``start_keyed_sink`` gets its state partition count from
+    ``state_partitions`` instead.
     """
     n = str(spark.sparkContext.defaultParallelism)
     confs = {
@@ -105,6 +107,20 @@ def ensure_io_confs(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # static conf on this build; builder path sets it instead
     return spark
+
+
+def state_partitions(spark: SparkSession) -> int:
+    """State partitions for a new keyed-sink stream: one per executor
+    (block managers minus the driver's), at least 1 — so 1 in local mode.
+
+    The partial aggregation before the shuffle bounds the state stage's
+    input by (groups touched x input splits) rows, so a state partition's
+    fixed per-trigger cost (its delta and checksum files, each a checksummed
+    local write, and one sink file per key it holds) outweighs its per-row
+    work; a second partition on the same executor adds that cost on the
+    same disk and JVM without adding a machine.
+    """
+    return max(1, spark.sparkContext._jsc.sc().getExecutorMemoryStatus().size() - 1)
 
 
 def get_spark(

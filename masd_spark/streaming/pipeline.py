@@ -50,6 +50,7 @@ from masd_spark.operators.validate import (
     with_event_time_ms,
 )
 from masd_spark.operators.window_agg import windowed_metrics
+from masd_spark.session import state_partitions
 
 
 def read_kafka_sensor_stream(
@@ -179,7 +180,13 @@ def start_keyed_sink(
         ws = ws.trigger(availableNow=True)
     elif trigger_interval:
         ws = ws.trigger(processingTime=trigger_interval)
-    return ws.start()
+    spark, key = aggregated.sparkSession, "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(state_partitions(spark)))
+    try:
+        return ws.start()
+    finally:
+        spark.conf.set(key, saved)
 
 
 def last_emission(sink: DataFrame, keys: Sequence[str]) -> DataFrame:

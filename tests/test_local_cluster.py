@@ -2,8 +2,9 @@
 
 Everything else in the suite runs ``local[N]`` — one JVM, where shuffle is
 an in-process memory copy and task serialization never crosses a process
-boundary. This module runs the nine LOCAL_CLUSTER_QUERIES plus one
-transformWithStateInPandas streaming flow under ``local-cluster[2,4,4096]``
+boundary. This module runs the nine LOCAL_CLUSTER_QUERIES, one
+transformWithStateInPandas streaming flow and one keyed-sink stream (its
+state partition count) under ``local-cluster[2,4,4096]``
 (the in-sandbox analogue of the reference's YARN 3x2-core topology,
 /root/reference/compose/spark.yml:46-54): a real Master, two Worker JVMs,
 executor-side Python workers, network shuffle, and closure/Arrow
@@ -104,6 +105,25 @@ try:
 except Exception as exc:  # noqa: BLE001
     tws_err = repr(exc)[:500]
 
+# The keyed sink's state partitions on a cluster: one per executor.
+sink_partitions, sink_err = None, None
+try:
+    from masd_spark.sources.simulator import SimulatorConfig, write_json_drops
+    from masd_spark.streaming.pipeline import (
+        read_file_sensor_stream, sensor_pipeline, start_keyed_sink)
+    from test_streaming import _offsets_conf
+
+    with tempfile.TemporaryDirectory(prefix="lc_sink_") as d:
+        tmp = Path(d)
+        write_json_drops(str(tmp / "in"), SimulatorConfig(duration_ms=30_000, seed=1), n_files=1)
+        q = start_keyed_sink(
+            sensor_pipeline(read_file_sensor_stream(spark, str(tmp / "in"))),
+            str(tmp / "out"), str(tmp / "ckpt"), available_now=True)
+        q.awaitTermination(300)
+        sink_partitions = int(_offsets_conf(tmp / "ckpt", 0)["spark.sql.shuffle.partitions"])
+except Exception as exc:  # noqa: BLE001
+    sink_err = repr(exc)[:500]
+
 print(
     "LCRESULT " + json.dumps(
         {
@@ -113,6 +133,8 @@ print(
             "headline_fail": headline_fail,
             "tws_ok": tws_ok,
             "tws_err": tws_err,
+            "sink_state_partitions": sink_partitions,
+            "sink_err": sink_err,
         }
     )
 )
@@ -269,3 +291,5 @@ def test_local_cluster_smoke():
     assert not res["headline_fail"], res["headline_fail"]
     assert len(res["headline_ok"]) == 9, res["headline_ok"]
     assert res["tws_ok"], res["tws_err"]
+    # one keyed-sink state partition per executor (the driver excluded)
+    assert res["sink_state_partitions"] == res["block_managers"] - 1 == 2, res

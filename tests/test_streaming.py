@@ -71,6 +71,19 @@ def test_stream_matches_batch_twin(spark, tmp_path):
     assert last_emission == expected
 
 
+def _keyed(rows):
+    """Window metrics by (window start, station, sensor), averages rounded."""
+    return {
+        (r["window"]["start"], r["station_id"], r["sensor_id"]): (
+            r["total_count"],
+            r["valid_count"],
+            r["malformed_count"],
+            None if r["avg_val"] is None else round(r["avg_val"], 9),
+        )
+        for r in rows
+    }
+
+
 def test_default_keyed_sink_matches_batch_twin(spark, tmp_path):
     """The library's own writer: every row lands stamped with its batch_id
     under one sink_key= directory per station, and the last emission per
@@ -98,20 +111,9 @@ def test_default_keyed_sink_matches_batch_twin(spark, tmp_path):
         p.name.split("=", 1)[1] for p in out.iterdir() if p.name.startswith("sink_key=")
     } == stations
 
-    def keyed(rows):
-        return {
-            (r["window"]["start"], r["station_id"], r["sensor_id"]): (
-                r["total_count"],
-                r["valid_count"],
-                r["malformed_count"],
-                None if r["avg_val"] is None else round(r["avg_val"], 9),
-            )
-            for r in rows
-        }
-
     got = last_emission(sink, ["window", "station_id", "sensor_id"]).collect()
-    assert len(got) == len(keyed(got))
-    assert keyed(got) == keyed(batch.collect())
+    assert len(got) == len(_keyed(got))
+    assert _keyed(got) == _keyed(batch.collect())
 
 
 def test_sliding_window_stream_matches_batch_twin(spark, tmp_path):
@@ -600,19 +602,34 @@ def test_checkpoint_recovery(spark, tmp_path):
     assert sum(len(rows) for _b, rows in second) == 0
 
 
-def test_partition_counts_follow_default_parallelism(spark, tmp_path):
-    """Every partition count comes from the live session's
-    defaultParallelism (session.ensure_io_confs), so a new stream's
-    checkpoint holds one state partition per core, not a fixed count."""
+def _offsets_conf(ckpt, batch_id: int) -> dict:
+    """The confs a checkpoint's offsets log recorded for ``batch_id``
+    (version line, then the batch metadata)."""
     import json
 
-    from masd_spark.session import ensure_io_confs
+    with open(os.path.join(ckpt, "offsets", str(batch_id))) as fh:
+        return json.loads(fh.read().splitlines()[1])["conf"]
+
+
+def _offsets_batches(ckpt) -> list[int]:
+    """The batch ids a checkpoint's offsets log holds, ascending."""
+    return sorted(int(p) for p in os.listdir(os.path.join(ckpt, "offsets")) if p.isdigit())
+
+
+def test_partition_counts_follow_default_parallelism(spark, tmp_path):
+    """Batch partition counts come from the live session's
+    defaultParallelism (session.ensure_io_confs); a new keyed-sink
+    stream's checkpoint holds one state partition per executor
+    (session.state_partitions, 1 in local mode), set only while the query
+    starts, so the session keeps its own count."""
+    from masd_spark.session import ensure_io_confs, state_partitions
 
     n = str(spark.sparkContext.defaultParallelism)
     keys = ("spark.sql.shuffle.partitions", "spark.sql.files.minPartitionNum")
     assert [spark.conf.get(k) for k in keys] == [n, n]
     ensure_io_confs(spark)
     assert [spark.conf.get(k) for k in keys] == [n, n]
+    assert state_partitions(spark) == 1
 
     src = str(tmp_path / "drops")
     write_json_drops(src, SimulatorConfig(duration_ms=30_000, seed=1), n_files=1)
@@ -624,11 +641,73 @@ def test_partition_counts_follow_default_parallelism(spark, tmp_path):
         available_now=True,
         write_batch=_collecting_sink([]),
     )
+    assert [spark.conf.get(k) for k in keys] == [n, n]
     q.awaitTermination(300)
-    # offsets log: version line, then the batch metadata with the confs
-    # the checkpoint pinned at creation
-    metadata = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
-    assert metadata["conf"]["spark.sql.shuffle.partitions"] == n
+    assert _offsets_conf(ckpt, 0)["spark.sql.shuffle.partitions"] == "1"
+
+
+def test_keyed_sink_restarts_old_partition_checkpoint(spark, tmp_path):
+    """A checkpoint created with one state partition per core (the count
+    before state_partitions) restarts through start_keyed_sink: Spark keeps
+    the recorded count, and the sink's last emission over both runs equals
+    the batch twin over both files."""
+    import shutil
+
+    n = str(spark.sparkContext.defaultParallelism)
+    drops = tmp_path / "drops"
+    assert write_json_drops(str(drops), CFG, n_files=2) > 0
+    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
+    src.mkdir()
+
+    def agg():
+        return sensor_pipeline(
+            read_file_sensor_stream(spark, str(src)),
+            watermark_delay="10 minutes",
+            nest=False,
+        )
+
+    def stamped(batch_df, batch_id):
+        (
+            batch_df.withColumn("batch_id", F.lit(batch_id))
+            .withColumn("sink_key", F.col("station_id"))
+            .write.mode("append")
+            .partitionBy("sink_key")
+            .parquet(str(out))
+        )
+
+    shutil.copy(drops / "drop_000.json", src)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == n
+    q = (
+        agg()
+        .writeStream.foreachBatch(stamped)
+        .outputMode("update")
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    first_run = _offsets_batches(ckpt)
+
+    shutil.copy(drops / "drop_001.json", src)
+    q = start_keyed_sink(
+        agg(),
+        path=str(out),
+        checkpoint_dir=str(ckpt),
+        key_col="station_id",
+        available_now=True,
+    )
+    q.awaitTermination(300)
+    batches = _offsets_batches(ckpt)
+    assert len(batches) > len(first_run) >= 1
+    for b in batches:
+        assert _offsets_conf(ckpt, b)["spark.sql.shuffle.partitions"] == n
+
+    got = last_emission(
+        spark.read.parquet(str(out)), ["window", "station_id", "sensor_id"]
+    ).collect()
+    assert len(got) == len(_keyed(got))
+    batch = sensor_pipeline(readings_df(spark, CFG), nest=False)
+    assert _keyed(got) == _keyed(batch.collect())
 
 
 def _run_heavy_hitters(spark, tmp_path):
