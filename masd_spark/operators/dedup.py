@@ -23,16 +23,21 @@ standard choice for Jaccard dedup.
 
 Plan-shape notes (these were measured, not guessed):
 - The shingle row-set feeds several consumers (self-join sides,
-  signatures, verification). It is cached AND eagerly materialized before
-  reuse — a lazily-cached subtree referenced N times within one action is
-  recomputed by each consumer racing to fill the cache (observed 4-8x).
+  signatures, verification). It is eagerly materialized with
+  ``localCheckpoint`` before reuse — a lazily-cached subtree referenced N
+  times within one action is recomputed by each consumer racing to fill
+  the cache (observed 4-8x), and broadcast subqueries bypass the cache.
   At real scale the same role is played by a persisted intermediate table.
-- ``set_size`` rides along on every shingle row (computed inside the one
-  per-doc aggregation), so Jaccard needs no extra size-lookup joins —
+- ``set_size`` rides along on every shingle row (computed from the same
+  per-row distinct array), so Jaccard needs no extra size-lookup joins —
   sizes reach the pair aggregation map-side via ``first()``.
-- Everything downstream of the per-doc aggregation reuses its doc_id
-  hash partitioning (collect_set -> explode preserves partitioning), so
-  signatures add NO extra shuffle.
+- The k-gram builder (operators/text.py:kgrams) hash-partitions the
+  documents by doc_id, so the shingle rows come out spread over
+  ``defaultParallelism`` partitions whatever the input's file layout.
+  Under AQE a checkpoint does not record that partitioning, so a per-doc
+  aggregation over the checkpointed set (signatures, prefix ranking)
+  shuffles its map-side partial result — one row per doc and partition —
+  never the shingle rows themselves.
 """
 
 from __future__ import annotations
@@ -43,7 +48,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from masd_spark.operators.skew import drop_overfull_buckets
-from masd_spark.operators.text import fingerprint_md5, simhash32, tokens
+from masd_spark.operators.text import fingerprint_md5, kgrams, simhash32, tokens
 
 
 def _as_fraction(threshold: float) -> tuple[int, int]:
@@ -71,33 +76,21 @@ def shingle_rows(
     k: int = 3,
     materialize: bool = True,
 ) -> DataFrame:
-    """(id, shingle, set_size) rows — distinct k-word shingles per doc,
-    with the doc's distinct-shingle count on every row.
+    """(id, set_size, shingle) rows — the distinct k-word shingles of each
+    document row (:func:`~masd_spark.operators.text.kgrams`), with the
+    row's distinct-shingle count on every row. Rows with fewer than k
+    tokens have none. Ids name documents, so they are expected unique.
 
-    Built as posexplode(tokens) + window ``lead`` rather than exploding an
-    array-of-shingles expression: Catalyst inlines array expressions into
-    the explode's implied ``size(...) > 0`` filter, re-evaluating the
-    tokenizing regex split per element access (O(tokens^2) per doc,
-    interpreted). The row-wise lead form evaluates split once per doc and
-    stays in whole-stage codegen.
-
-    ONE shuffle total (keyed by doc): the window sort, the per-doc
-    collect_set dedup, and the set_size all share the same partitioning.
-    The per-doc set is collected as an in-memory array — fine for bounded
-    documents (LLM corpus docs); for multi-million-token inputs, chunk
-    upstream first.
+    No shuffle beyond the builder's: the distinct set is an
+    ``array_distinct`` per row, bound by its own Generate so ``size`` and
+    ``explode`` read it once. The per-doc set is an in-memory array — fine
+    for bounded documents (LLM corpus docs); for multi-million-token
+    inputs, chunk upstream first.
     """
-    toked = df.select(
-        F.col(id_col), F.posexplode(tokens(text_col)).alias("pos", "tok")
+    sets = kgrams(df, id_col, text_col, k).select(
+        F.col(id_col), F.explode(F.array(F.array_distinct("kgrams"))).alias("_set")
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
-    sh = toked.select(
-        F.col(id_col),
-        F.when(parts[-1].isNotNull(), F.concat_ws(" ", *parts)).alias("shingle"),
-    ).filter(F.col("shingle").isNotNull())
-    per_doc = sh.groupBy(id_col).agg(F.collect_set("shingle").alias("_set"))
-    out = per_doc.select(
+    out = sets.select(
         F.col(id_col),
         F.size("_set").cast("bigint").alias("set_size"),
         F.explode("_set").alias("shingle"),
@@ -105,11 +98,37 @@ def shingle_rows(
     if materialize:
         # localCheckpoint, not cache(): broadcast-subquery threads plan
         # independently and were observed BYPASSING the cache, recomputing
-        # the whole window+collect_set lineage per broadcast (10x blowup).
+        # the whole shingle lineage per broadcast (10x blowup).
         # Checkpointing truncates the lineage — downstream plans, including
         # broadcast subqueries, can only read the materialized blocks.
         out = out.localCheckpoint(eager=True)
     return out
+
+
+def _dup_spans(
+    df: DataFrame, id_col: str, text_col: str, k: int, min_docs: int
+) -> tuple[DataFrame, DataFrame]:
+    """Positional k-gram spans (id, pos, shingle) of every doc, and the
+    shingles that occur in >= ``min_docs`` distinct documents.
+
+    The spans are checkpointed: they feed the frequency table AND the
+    join back. One doc-keyed shuffle of the raw rows (the builder's),
+    one shingle-keyed frequency aggregation; no all-pairs stage.
+    """
+    spans = (
+        kgrams(df, id_col, text_col, k)
+        .select(F.col(id_col), F.posexplode("kgrams").alias("pos", "shingle"))
+        .localCheckpoint(eager=True)
+    )
+    dup = (
+        spans.select(id_col, "shingle")
+        .distinct()
+        .groupBy("shingle")
+        .agg(F.count("*").alias("_nd"))
+        .filter(F.col("_nd") >= min_docs)
+        .select("shingle")
+    )
+    return spans, dup
 
 
 def span_duplication(
@@ -131,12 +150,11 @@ def span_duplication(
     n_dup_spans, dup_fraction); docs with < k tokens have no spans and no
     row.
 
-    Plan: one doc-keyed shuffle builds positional shingles (posexplode +
-    window lead, same codegen-friendly shape as shingle_rows), one
-    shingle-keyed aggregation computes distinct-doc frequency, and the
-    dup flag returns via a shingle-keyed semi-join; the final per-doc agg
-    reuses the doc partitioning. No all-pairs stage anywhere — cost is
-    linear in total tokens + one frequency table.
+    Plan: positional spans and the duplicated-shingle table come from
+    :func:`_dup_spans`; the dup flag returns via a shingle-keyed
+    semi-join and the final per-doc agg reuses the doc partitioning. No
+    all-pairs stage anywhere — cost is linear in total tokens + one
+    frequency table.
 
     Invalid-input contract: "occurs in >= min_docs DISTINCT documents"
     needs document identity, so null-id rows are EXCLUDED — Spark's
@@ -144,24 +162,7 @@ def span_duplication(
     count(DISTINCT ...) ignores it. Oracle twins filter identically.
     """
     df = df.filter(F.col(id_col).isNotNull())
-    toked = df.select(
-        F.col(id_col), F.posexplode(tokens(text_col)).alias("pos", "tok")
-    )
-    w = Window.partitionBy(id_col).orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
-    spans = toked.select(
-        F.col(id_col),
-        F.when(parts[-1].isNotNull(), F.concat_ws(" ", *parts)).alias("shingle"),
-    ).filter(F.col("shingle").isNotNull())
-    spans = spans.localCheckpoint(eager=True)  # feeds freq AND the join
-    dup = (
-        spans.select(id_col, "shingle")
-        .distinct()
-        .groupBy("shingle")
-        .agg(F.count("*").alias("_nd"))
-        .filter(F.col("_nd") >= min_docs)
-        .select("shingle")
-    )
+    spans, dup = _dup_spans(df, id_col, text_col, k, min_docs)
     flagged = spans.join(dup, "shingle", "left_semi").groupBy(id_col).agg(
         F.count("*").alias("n_dup_spans")
     )
@@ -204,29 +205,11 @@ def _dup_token_runs(
     covered-token-explode formulation, so driver parity cross-proves the
     two formulations equivalent.
 
-    Cost: linear in total tokens — one doc-keyed shuffle for positional
-    shingles, one shingle-keyed frequency, one semi-join back, and the
-    merge window reuses the doc partitioning. No all-pairs stage.
+    Cost: linear in total tokens — the spans and their frequency table
+    (:func:`_dup_spans`), one semi-join back, and the merge window reuses
+    the doc partitioning. No all-pairs stage.
     """
-    toked = df.select(
-        F.col(id_col), F.posexplode(tokens(text_col)).alias("pos", "tok")
-    )
-    w = Window.partitionBy(id_col).orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
-    spans = toked.select(
-        F.col(id_col),
-        F.col("pos"),
-        F.when(parts[-1].isNotNull(), F.concat_ws(" ", *parts)).alias("shingle"),
-    ).filter(F.col("shingle").isNotNull())
-    spans = spans.localCheckpoint(eager=True)  # feeds freq AND the join
-    dup = (
-        spans.select(id_col, "shingle")
-        .distinct()
-        .groupBy("shingle")
-        .agg(F.count("*").alias("_nd"))
-        .filter(F.col("_nd") >= min_docs)
-        .select("shingle")
-    )
+    spans, dup = _dup_spans(df, id_col, text_col, k, min_docs)
     anchors = spans.join(dup, "shingle", "left_semi").select(
         id_col, "pos", (F.col("pos") + F.lit(k)).alias("_end")
     )
@@ -360,22 +343,54 @@ def strip_duplicated_spans(
     )
 
 
-def _pair_jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
-    """(doc_a, doc_b, shingle-match rows with size_a/size_b) -> thresholded
-    Jaccard per pair. Sizes arrive map-side via first() — no extra joins."""
-    inter = pairs.groupBy("doc_a", "doc_b").agg(
+def _intersections(matches: DataFrame, a: str, b: str) -> DataFrame:
+    """Shingle-match rows (a, b, size_a, size_b, ...) -> one row per pair:
+    (a, b, n_inter, size_a, size_b). Sizes arrive map-side via first() —
+    no size-lookup joins."""
+    return matches.groupBy(a, b).agg(
         F.count("*").alias("n_inter"),
         F.first("size_a").alias("size_a"),
         F.first("size_b").alias("size_b"),
     )
-    jac = inter.withColumn(
-        "jaccard",
-        F.round(
-            F.col("n_inter") / (F.col("size_a") + F.col("size_b") - F.col("n_inter")),
-            6,
-        ),
+
+
+def _jaccard_at_least(counts: DataFrame, a: str, b: str, threshold: float) -> DataFrame:
+    """(a, b, n_inter, size_a, size_b) -> (a, b, jaccard): the exact
+    Jaccard rounded to 6 dp, kept when >= threshold. The module's one
+    Jaccard expression."""
+    jac = F.round(
+        F.col("n_inter") / (F.col("size_a") + F.col("size_b") - F.col("n_inter")), 6
     )
-    return jac.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")
+    return counts.select(a, b, jac.alias("jaccard")).filter(F.col("jaccard") >= threshold)
+
+
+def verify_jaccard(
+    candidates: DataFrame,
+    shingles_a: DataFrame,
+    shingles_b: DataFrame,
+    threshold: float,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Exact-Jaccard verification of CANDIDATE pairs only (never all
+    pairs): (a, b, jaccard >= threshold), jaccard rounded to 6 dp.
+
+    ``candidates`` holds exactly two id columns ``(a, b)``, whose names
+    the output keeps; ``shingles_a``/``shingles_b`` are
+    :func:`shingle_rows` tables (id, set_size, shingle) holding the a and
+    b documents. a's shingles attach by id, b's equi-join on (id,
+    shingle), and the match rows aggregate into the intersection size. A
+    caller that can bound a side (the history side of a probe) semi-joins
+    it to the candidates before the call.
+    """
+    a, b = candidates.columns
+    sh_a = shingles_a.select(
+        F.col(id_col).alias(a), "shingle", F.col("set_size").alias("size_a")
+    )
+    sh_b = shingles_b.select(
+        F.col(id_col).alias(b), "shingle", F.col("set_size").alias("size_b")
+    )
+    matches = candidates.join(sh_a, a).join(sh_b, [b, "shingle"])
+    return _jaccard_at_least(_intersections(matches, a, b), a, b, threshold)
 
 
 def jaccard_pairs(
@@ -408,18 +423,7 @@ def jaccard_pairs(
         id_col,
         max_df,
     )
-    jac = counts.select(
-        "doc_a",
-        "doc_b",
-        F.round(
-            F.col("n_inter")
-            / (F.col("size_a") + F.col("size_b") - F.col("n_inter")),
-            6,
-        ).alias("jaccard"),
-    )
-    return jac.filter(F.col("jaccard") >= threshold).select(
-        "doc_a", "doc_b", "jaccard"
-    )
+    return _jaccard_at_least(counts, "doc_a", "doc_b", threshold)
 
 
 def containment_pairs(
@@ -479,53 +483,38 @@ def _pair_counts(sh: DataFrame, id_col: str, max_df: int | None) -> DataFrame:
     b = sh.select(
         F.col(id_col).alias("doc_b"), "shingle", F.col("set_size").alias("size_b")
     )
+    if max_df is not None:
+        # One document-frequency aggregation, expressed as its HOT complement
+        # (optimization r8, guide §2.4/§3.1): the old form joined `rare` into
+        # both pair sides and `hot` into both hot-set builds as four DISTINCT
+        # filtered subtrees, so Catalyst planned the dfreq aggregation FOUR
+        # times (4 exchanges + 4 rescans of the shingle checkpoint; plan-
+        # verified). The hot set is the same information and provably TINY:
+        # #hot <= sum(df)/max_df = (total shingle rows)/(n_docs/100) = 100 x
+        # avg shingles/doc — bounded by document length, independent of
+        # corpus size — so it broadcasts safely at any scale, rare-filtering
+        # becomes a broadcast ANTI join (no shuffle of the shingle rows), and
+        # the ONE identical broadcast subtree is planned once and reused by
+        # ReuseExchange across all three consumers.
+        # The hot list is materialized once (it is tiny — see bound above) so
+        # the df aggregation runs exactly ONE time: the eager hot_sets build
+        # below and the main query's three broadcast consumers otherwise each
+        # re-planned the full groupBy over the shingle checkpoint
+        # (ReuseExchange only dedupes within a single executed plan).
+        hot = F.broadcast(
+            sh.groupBy("shingle")
+            .agg(F.count("*").alias("_df"))
+            .filter(F.col("_df") > max_df)
+            .select("shingle")
+            .localCheckpoint(eager=True)
+        )
+        a = a.join(hot, "shingle", "left_anti")
+        b = b.join(hot, "shingle", "left_anti")
+    counts = _intersections(
+        a.join(b, "shingle").filter(F.col("doc_a") < F.col("doc_b")), "doc_a", "doc_b"
+    )
     if max_df is None:
-        return (
-            a.join(b, "shingle")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(
-                F.count("*").alias("n_inter"),
-                F.first("size_a").alias("size_a"),
-                F.first("size_b").alias("size_b"),
-            )
-        )
-    # One document-frequency aggregation, expressed as its HOT complement
-    # (optimization r8, guide §2.4/§3.1): the old form joined `rare` into
-    # both pair sides and `hot` into both hot-set builds as four DISTINCT
-    # filtered subtrees, so Catalyst planned the dfreq aggregation FOUR
-    # times (4 exchanges + 4 rescans of the shingle checkpoint; plan-
-    # verified). The hot set is the same information and provably TINY:
-    # #hot <= sum(df)/max_df = (total shingle rows)/(n_docs/100) = 100 x
-    # avg shingles/doc — bounded by document length, independent of
-    # corpus size — so it broadcasts safely at any scale, rare-filtering
-    # becomes a broadcast ANTI join (no shuffle of the shingle rows), and
-    # the ONE identical broadcast subtree is planned once and reused by
-    # ReuseExchange across all three consumers.
-    # The hot list is materialized once (it is tiny — see bound above) so
-    # the df aggregation runs exactly ONE time: the eager hot_sets build
-    # below and the main query's three broadcast consumers otherwise each
-    # re-planned the full groupBy over the shingle checkpoint
-    # (ReuseExchange only dedupes within a single executed plan).
-    hot = F.broadcast(
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") > max_df)
-        .select("shingle")
-        .localCheckpoint(eager=True)
-    )
-    ra = a.join(hot, "shingle", "left_anti")
-    rb = b.join(hot, "shingle", "left_anti")
-    rare_agg = (
-        ra.join(rb, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count("*").alias("_rare_inter"),
-            F.first("size_a").alias("size_a"),
-            F.first("size_b").alias("size_b"),
-        )
-    )
+        return counts
     # left_semi + collect_set over the few hot rows; checkpointed because
     # it is referenced twice (doc_a and doc_b attach) and is O(docs-with-
     # a-hot-shingle) rows of <=100-element arrays — without the
@@ -538,7 +527,7 @@ def _pair_counts(sh: DataFrame, id_col: str, max_df: int | None) -> DataFrame:
     )
     empty = F.array().cast("array<string>")
     return (
-        rare_agg.join(
+        counts.join(
             hot_sets.select(F.col(id_col).alias("doc_a"), F.col("_hot").alias("_hot_a")),
             "doc_a",
             "left",
@@ -552,7 +541,7 @@ def _pair_counts(sh: DataFrame, id_col: str, max_df: int | None) -> DataFrame:
             "doc_a",
             "doc_b",
             (
-                F.col("_rare_inter")
+                F.col("n_inter")
                 + F.size(
                     F.array_intersect(
                         F.coalesce("_hot_a", empty), F.coalesce("_hot_b", empty)
@@ -678,34 +667,31 @@ def simhash_pairs(
 
 
 def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    n_hashes: int = 16,
-    shingles: DataFrame | None = None,
+    shingles: DataFrame, id_col: str = "doc_id", n_hashes: int = 16
 ) -> DataFrame:
-    """MinHash signature per doc: sig_i = min over shingles of
-    md5(i || ':' || shingle), i in [0, n_hashes).
+    """MinHash signature per doc of a :func:`shingle_rows` table:
+    sig_i = min over the doc's shingles of md5(i || ':' || shingle),
+    i in [0, n_hashes).
 
-    The groupBy reuses the shingle set's doc_id partitioning — no extra
-    shuffle; the md5s are computed map-side, n_hashes per shingle.
+    The md5s and partial minima are computed map-side, n_hashes per
+    shingle, so at most one row per doc and partition is shuffled.
     """
-    sh = shingles if shingles is not None else shingle_rows(df, id_col, text_col, k)
     mins = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"sig_{i}")
         for i in range(n_hashes)
     ]
-    return sh.groupBy(id_col).agg(*mins)
+    return shingles.groupBy(id_col).agg(*mins)
 
 
 def band_rows(
-    sigs: DataFrame, id_col: str, n_hashes: int, n_bands: int
+    shingles: DataFrame, id_col: str, n_hashes: int, n_bands: int
 ) -> DataFrame:
-    """LSH banding of a signature table: one (id, band, band_hash) row per
+    """The LSH band index of a shingle table: sign it
+    (:func:`minhash_signatures`), then one (id, band, band_hash) row per
     band, band_hash = md5 of the band's signature slice. This IS the
     persisted index schema of the incremental variant — (band, band_hash)
     is the equi-join key that replaces all-pairs comparison."""
+    sigs = minhash_signatures(shingles, id_col, n_hashes)
     rows_per_band = n_hashes // n_bands
     band_cols = [
         F.struct(
@@ -741,7 +727,7 @@ def minhash_lsh_pairs(
     ~0.95 at j=0.8, ~0.3 at j=0.5). Candidates are then verified with the
     exact Jaccard, so the threshold is honest; only recall is approximate.
 
-    Scale: signatures are one no-extra-shuffle aggregation over one
+    Scale: signatures are one map-side-combined aggregation over one
     shared, materialized shingle set; banding explodes n_bands rows/doc;
     the bucket self-join only ever joins docs whose band-hash matches;
     verification touches candidates only. No all-pairs stage anywhere.
@@ -760,11 +746,8 @@ def minhash_lsh_pairs(
     band, which no per-band policy can recover.
     """
     sh = shingles if shingles is not None else shingle_rows(df, id_col, text_col, k)
-    sigs = minhash_signatures(df, id_col, text_col, k, n_hashes, shingles=sh)
     banded = drop_overfull_buckets(
-        band_rows(sigs, id_col, n_hashes, n_bands),
-        ["band", "band_hash"],
-        max_bucket,
+        band_rows(sh, id_col, n_hashes, n_bands), ["band", "band_hash"], max_bucket
     )
     # Materialize the banded rows before the self-join (optimization r8,
     # guide §2.4): the candidate join references `banded` on BOTH sides,
@@ -783,16 +766,7 @@ def minhash_lsh_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    # Exact-Jaccard verification of CANDIDATES ONLY (never all pairs):
-    # attach doc_a's shingles, equi-join doc_b's shingles -> intersection.
-    sh_a = sh.select(
-        F.col(id_col).alias("doc_a"), "shingle", F.col("set_size").alias("size_a")
-    )
-    sh_b = sh.select(
-        F.col(id_col).alias("doc_b"), "shingle", F.col("set_size").alias("size_b")
-    )
-    pairs = candidates.join(sh_a, "doc_a").join(sh_b, ["doc_b", "shingle"])
-    return _pair_jaccard(pairs, threshold)
+    return verify_jaccard(candidates, sh, sh, threshold, id_col)
 
 
 def prefix_filter_pairs(
@@ -892,16 +866,7 @@ def prefix_filter_pairs(
             "size_b",
         )
     )
-    jac = scored.withColumn(
-        "jaccard",
-        F.round(
-            F.col("n_inter") / (F.col("size_a") + F.col("size_b") - F.col("n_inter")),
-            6,
-        ),
-    )
-    return jac.filter(F.col("jaccard") >= threshold).select(
-        "doc_a", "doc_b", "jaccard"
-    )
+    return _jaccard_at_least(scored, "doc_a", "doc_b", threshold)
 
 
 def tfidf_cosine_pairs(
@@ -1040,44 +1005,45 @@ def incremental_minhash_pairs(
     (tests/test_skew_soak.py measures the planted case).
     """
     sh_h = shingle_rows(history, id_col, text_col, k)
-    sh_i = shingle_rows(incoming, id_col, text_col, k)
-    bands_h = band_rows(
-        minhash_signatures(history, id_col, text_col, k, n_hashes, shingles=sh_h),
-        id_col, n_hashes, n_bands,
-    ).select(F.col(id_col).alias("doc_hist"), "band", "band_hash")
-    bands_h = drop_overfull_buckets(bands_h, ["band", "band_hash"], max_bucket)
-    bands_i = band_rows(
-        minhash_signatures(incoming, id_col, text_col, k, n_hashes, shingles=sh_i),
-        id_col, n_hashes, n_bands,
-    ).select(F.col(id_col).alias("doc_new"), "band", "band_hash")
+    bands_h = drop_overfull_buckets(
+        band_rows(sh_h, id_col, n_hashes, n_bands), ["band", "band_hash"], max_bucket
+    )
+    return _probe_history(
+        shingle_rows(incoming, id_col, text_col, k),
+        bands_h, sh_h, id_col, n_hashes, n_bands, threshold,
+    )
+
+
+def _probe_history(
+    sh_new: DataFrame,
+    bands_hist: DataFrame,
+    sh_hist: DataFrame,
+    id_col: str,
+    n_hashes: int,
+    n_bands: int,
+    threshold: float,
+) -> DataFrame:
+    """(doc_new, doc_hist, jaccard >= threshold): band the incoming
+    shingles, equi-join them against the history band index, and verify
+    the candidates against the history shingles semi-joined down to the
+    candidate docs first — the "fetch candidate docs' text" step, bounded
+    by candidate count, not history size. Shared by the inline and the
+    persisted-index probes."""
+    bands_new = band_rows(sh_new, id_col, n_hashes, n_bands).select(
+        F.col(id_col).alias("doc_new"), "band", "band_hash"
+    )
     candidates = (
-        bands_i.join(bands_h, ["band", "band_hash"])
+        bands_new.join(
+            bands_hist.select(F.col(id_col).alias("doc_hist"), "band", "band_hash"),
+            ["band", "band_hash"],
+        )
         .select("doc_new", "doc_hist")
         .distinct()
     )
-    sh_a = sh_i.select(
-        F.col(id_col).alias("doc_new"), "shingle", F.col("set_size").alias("size_a")
-    )
-    sh_b = sh_h.join(
+    hist = sh_hist.join(
         candidates.select(F.col("doc_hist").alias(id_col)).distinct(), id_col, "left_semi"
-    ).select(
-        F.col(id_col).alias("doc_hist"), "shingle", F.col("set_size").alias("size_b")
     )
-    pairs = candidates.join(sh_a, "doc_new").join(sh_b, ["doc_hist", "shingle"])
-    agg = pairs.groupBy("doc_new", "doc_hist").agg(
-        F.count("*").alias("n_inter"),
-        F.first("size_a").alias("size_a"),
-        F.first("size_b").alias("size_b"),
-    )
-    jac = F.round(
-        F.col("n_inter") / (F.col("size_a") + F.col("size_b") - F.col("n_inter")),
-        6,
-    )
-    return (
-        agg.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_new", "doc_hist", "jaccard")
-    )
+    return verify_jaccard(candidates, sh_new, hist, threshold, id_col)
 
 
 def build_minhash_index(
@@ -1114,11 +1080,9 @@ def build_minhash_index(
     ``path`` for an EXTERNAL table (scratch outside the warehouse dir)."""
     spark = history.sparkSession
     sh = shingle_rows(history, id_col, text_col, k)
-    bands = band_rows(
-        minhash_signatures(history, id_col, text_col, k, n_hashes, shingles=sh),
-        id_col, n_hashes, n_bands,
+    bands = drop_overfull_buckets(
+        band_rows(sh, id_col, n_hashes, n_bands), ["band", "band_hash"], max_bucket
     )
-    bands = drop_overfull_buckets(bands, ["band", "band_hash"], max_bucket)
     w = bands.write.mode("overwrite").bucketBy(n_buckets, "band_hash")
     if path is not None:
         w = w.option("path", path)
@@ -1167,12 +1131,7 @@ def append_minhash_index(
     spark = new_docs.sparkSession
     p = load_minhash_params(spark, table_name)
     sh = shingle_rows(new_docs, id_col, text_col, p["k"])
-    bands = band_rows(
-        minhash_signatures(
-            new_docs, id_col, text_col, p["k"], p["n_hashes"], shingles=sh
-        ),
-        id_col, p["n_hashes"], p["n_bands"],
-    )
+    bands = band_rows(sh, id_col, p["n_hashes"], p["n_bands"])
     bands.write.mode("append").bucketBy(n_buckets, "band_hash").saveAsTable(table_name)
     sh.write.mode("append").bucketBy(n_buckets, id_col).saveAsTable(
         table_name + "_shingles"
@@ -1196,100 +1155,9 @@ def minhash_persisted_pairs(
     corpus split (same signing geometry, loaded from the params table),
     so the same oracle SQL checks both."""
     p = load_minhash_params(spark, table_name)
-    sh_i = shingle_rows(incoming, id_col, text_col, p["k"])
-    bands_i = band_rows(
-        minhash_signatures(
-            incoming, id_col, text_col, p["k"], p["n_hashes"], shingles=sh_i
-        ),
-        id_col, p["n_hashes"], p["n_bands"],
-    ).select(F.col(id_col).alias("doc_new"), "band", "band_hash")
-    bands_h = spark.table(table_name).select(
-        F.col(id_col).alias("doc_hist"), "band", "band_hash"
+    return _probe_history(
+        shingle_rows(incoming, id_col, text_col, p["k"]),
+        spark.table(table_name),
+        spark.table(table_name + "_shingles"),
+        id_col, p["n_hashes"], p["n_bands"], threshold,
     )
-    candidates = (
-        bands_i.join(bands_h, ["band", "band_hash"])
-        .select("doc_new", "doc_hist")
-        .distinct()
-    )
-    sh_a = sh_i.select(
-        F.col(id_col).alias("doc_new"), "shingle", F.col("set_size").alias("size_a")
-    )
-    sh_b = spark.table(table_name + "_shingles").join(
-        candidates.select(F.col("doc_hist").alias(id_col)).distinct(),
-        id_col,
-        "left_semi",
-    ).select(
-        F.col(id_col).alias("doc_hist"), "shingle", F.col("set_size").alias("size_b")
-    )
-    pairs = candidates.join(sh_a, "doc_new").join(sh_b, ["doc_hist", "shingle"])
-    agg = pairs.groupBy("doc_new", "doc_hist").agg(
-        F.count("*").alias("n_inter"),
-        F.first("size_a").alias("size_a"),
-        F.first("size_b").alias("size_b"),
-    )
-    jac = F.round(
-        F.col("n_inter") / (F.col("size_a") + F.col("size_b") - F.col("n_inter")),
-        6,
-    )
-    return (
-        agg.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_new", "doc_hist", "jaccard")
-    )
-
-
-def shingle_rows_mapside(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    materialize: bool = True,
-) -> DataFrame:
-    """Shuffle-FREE twin of :func:`shingle_rows`: same (id, shingle,
-    set_size) rows, built entirely map-side.
-
-    The window-lead form pays one doc-keyed sort shuffle purely to dodge
-    Catalyst's project-collapse trap (an array expression referenced by
-    explode AND size() gets inlined and re-evaluated). This variant
-    dodges it differently: each intermediate array is passed through
-    ``explode(array(...))`` — a Generate evaluates its child ONCE per
-    row and emits the result as a bound ATTRIBUTE, which downstream
-    expressions reference by slot instead of re-inlining. Three chained
-    Generates (token array -> distinct-shingle array -> shingle rows),
-    zero exchanges; positional shingles come from slice() over the
-    materialized token attribute, never from re-split text.
-
-    Measured head-to-head at sf0.1 (warm): build 0.56s vs 0.69s for the
-    window-lead form — but its checkpoint inherits the SCAN's partition
-    count (3 files here), so downstream consumers start less parallel
-    than from the lead form's 32 shuffle partitions (jaccard 1.8s vs
-    1.1s). At fixture scale the lead form therefore stays the default;
-    at real scale the trade flips — input splits provide parallelism and
-    this form shuffles NOTHING, while the lead form shuffles the
-    exploded token rows (k x corpus tokens), its single biggest cost.
-    Equality with shingle_rows is pinned by test (exact multiset).
-    """
-    toks = df.select(
-        F.col(id_col), F.explode(F.array(tokens(text_col))).alias("_toks")
-    )
-    n_spans = F.size("_toks") - (k - 1)
-    sh_arr = F.when(
-        n_spans >= 1,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(n_spans, F.lit(1))),
-                lambda i: F.concat_ws(" ", F.slice("_toks", i, k)),
-            )
-        ),
-    )
-    per_doc = toks.select(
-        F.col(id_col), F.explode(F.array(sh_arr)).alias("_set")
-    ).filter(F.col("_set").isNotNull())
-    out = per_doc.select(
-        F.col(id_col),
-        F.size("_set").cast("bigint").alias("set_size"),
-        F.explode("_set").alias("shingle"),
-    )
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-    return out

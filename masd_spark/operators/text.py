@@ -35,22 +35,41 @@ def tokens(text: Column | str, lowercase: bool = True) -> Column:
     return F.split(c, r"\s+")
 
 
-def word_shingles(toks_col: str, k: int = 3) -> Column:
-    """Distinct k-word shingles (each a space-joined string) from an
-    array<string> column named ``toks_col``.
+def kgrams(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
+) -> DataFrame:
+    """Positional k-grams of every input row: ``(id, kgrams)``, one row
+    per input row, where ``kgrams[i]`` is tokens i..i+k-1 of
+    :func:`tokens` joined by one space (empty for fewer than k tokens or
+    null text). The one k-gram construction of the package: shingle sets,
+    positional spans, n-gram counts and repetition scores all start here.
 
-    Docs shorter than k words produce an empty set. Built via
-    transform(sequence(...)) — no explode needed until the caller wants
-    one row per shingle.
+    Map-side: each array is bound once by an ``explode(array(...))``
+    Generate, so ``slice`` reads the tokens by slot. Without the binding
+    Catalyst inlines the tokenizer into the array expression's consumers
+    and re-runs the regex split per element access, O(tokens^2) per row
+    (ARCHITECTURE.md, finding 1). Rows never mix: a k-gram never crosses
+    an input row, whatever its id (duplicate or null ids included).
+
+    The input rows are always hash-partitioned by ``id_col`` to
+    ``defaultParallelism`` first. A single-row-group parquet file is read
+    by one task however many splits it has, so the scan's partition count
+    says nothing about the spread; one shuffle of the raw rows (not of
+    the k-grams) fixes it, and a per-id aggregation straight over the
+    k-grams reuses it.
     """
-    parts = ", ".join(f"{toks_col}[i + {j}]" for j in range(k))
-    return F.array_distinct(
-        F.expr(
-            f"CASE WHEN size({toks_col}) >= {k} THEN "
-            f"transform(sequence(0, size({toks_col}) - {k}), i -> concat_ws(' ', {parts})) "
-            f"ELSE CAST(array() AS array<string>) END"
-        )
+    par = df.sparkSession.sparkContext.defaultParallelism
+    bound = df.repartition(par, id_col).select(
+        F.col(id_col), F.explode(F.array(tokens(text_col))).alias("_toks")
     )
+    n = F.size("_toks") - (k - 1)
+    grams = F.when(
+        n >= 1,
+        F.transform(
+            F.sequence(F.lit(1), n), lambda i: F.concat_ws(" ", F.slice("_toks", i, k))
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    return bound.select(F.col(id_col), F.explode(F.array(grams)).alias("kgrams"))
 
 
 def token_count(text: Column | str) -> Column:
@@ -434,31 +453,12 @@ def ngram_counts(
 ) -> DataFrame:
     """Corpus-wide n-gram occurrence counts -> (ngram, n_occurrences).
 
-    Built as posexplode(tokens) + window lead (the shingle_rows rule:
-    exploding an array-of-ngrams expression re-runs the tokenizer per
-    element — measured O(tokens^2); the row-wise lead form splits once
-    per doc and stays in codegen). Two shuffles: the per-doc window sort,
-    then the global count keyed by ngram — the count is partial+final, so
-    hot n-grams (Zipf head) combine map-side before they shuffle.
-
-    The lead-window is keyed by a synthetic per-ROW id, not ``id_col``:
-    n-grams never cross a text row, so no identity is required — and
-    partitioning by a user id would interleave the token streams of any
-    rows SHARING an id (duplicate or null ids) into cross-document
-    garbage n-grams. The synthetic id is partitioning-dependent but only
-    ever used as an opaque grouping handle; the per-row n-gram multiset
-    it produces is not.
+    The n-grams come from :func:`kgrams`, per input row, so rows sharing
+    an id (duplicate or null ids) never mix their token streams. One
+    global count keyed by ngram; it is partial+final, so hot n-grams
+    (Zipf head) combine map-side before they shuffle.
     """
-    from pyspark.sql import Window
-
     if n < 2:
         raise ValueError("n must be >= 2 (unigrams: count tokens() directly)")
-    toked = df.withColumn("_rid", F.monotonically_increasing_id()).select(
-        F.col("_rid"), F.posexplode(tokens(text_col)).alias("pos", "tok")
-    )
-    w = Window.partitionBy("_rid").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, n)]
-    grams = toked.select(
-        F.when(parts[-1].isNotNull(), F.concat_ws(" ", *parts)).alias("ngram")
-    ).filter(F.col("ngram").isNotNull())
+    grams = kgrams(df, id_col, text_col, n).select(F.explode("kgrams").alias("ngram"))
     return grams.groupBy("ngram").agg(F.count("*").alias("n_occurrences"))

@@ -15,7 +15,7 @@ from masd_spark.operators.dedup import (
     duplicated_spans,
     jaccard_pairs,
     minhash_lsh_pairs,
-    shingle_rows_mapside,
+    shingle_rows,
     span_duplication,
     strip_duplicated_spans,
 )
@@ -65,28 +65,12 @@ def _shared_shingles(spark: SparkSession, sf_dir: str, k: int = 3):
     # applicationId is unique per SparkContext lifetime (unlike id(), which
     # CPython can recycle after a stop/restart and hand back a cache entry
     # whose checkpointed blocks belong to a dead context).
-    #
-    # Optimization r8 (guide §2.4): built with the shuffle-FREE mapside
-    # form — the window-lead form paid a doc-keyed shuffle+sort of the
-    # EXPLODED token rows (k x corpus tokens, its single biggest cost)
-    # purely to dodge Catalyst's project-collapse trap, which the mapside
-    # form dodges via chained Generates instead. Its one former downside
-    # (the checkpoint inherits the scan's partition count, under-parallel
-    # on MB-scale single-file fixtures) is fixed by flooring parallelism
-    # with one repartition of the RAW doc rows — strictly fewer bytes
-    # than the token shuffle it replaces, and skipped entirely when the
-    # scan is already wide (a real cluster's splits). Measured at sf0.1:
-    # build 0.5-0.7s vs 1.5s warm (1.1s vs 7.1s cold), downstream pair
-    # joins unchanged-or-faster; exact multiset equality with
-    # shingle_rows is pinned by tests/test_text_dedup.py.
     key = (spark.sparkContext.applicationId, sf_dir, k)
     if key not in _SHINGLE_CACHE:
         docs = load_table(spark, sf_dir, "documents")
-        par = spark.sparkContext.defaultParallelism
-        if docs.rdd.getNumPartitions() < par:
-            docs = docs.repartition(par, "doc_id")
-        _SHINGLE_CACHE[key] = shingle_rows_mapside(docs, "doc_id", "text", k)
+        _SHINGLE_CACHE[key] = shingle_rows(docs, "doc_id", "text", k)
     return _SHINGLE_CACHE[key]
+
 
 # Shared SQL fragments -----------------------------------------------------
 

@@ -317,15 +317,16 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Intra-document repetition (the Gopher-rules quality signal):
     1 - distinct/total 3-gram shingles. High ratio = boilerplate/looping
-    text. Pure per-row array math — no explode, no shuffle.
+    text. Per-row array math over operators/text.py:kgrams — no explode
+    of the k-grams, no aggregation.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    from masd_spark.operators.text import tokens, word_shingles
+    from masd_spark.operators.text import kgrams
 
-    with_toks = docs.withColumn("_toks", tokens("text"))
-    n_total = F.greatest(F.size("_toks") - 2, F.lit(0)).cast("bigint")
-    n_distinct = F.size(word_shingles("_toks", 3)).cast("bigint")
-    return with_toks.select(
+    docs = load_table(spark, sf_dir, "documents")
+    grams = kgrams(docs, "doc_id", "text", 3)
+    n_total = F.size("kgrams").cast("bigint")
+    n_distinct = F.size(F.array_distinct("kgrams")).cast("bigint")
+    return grams.select(
         "doc_id",
         n_total.alias("n_shingles"),
         F.when(

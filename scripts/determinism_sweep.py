@@ -22,6 +22,14 @@ This is the registry-wide generalization of the per-query
 never the one we tested on, so a result that moves when the partitioning
 moves is a wrong-at-scale result.
 
+The six stream twins start through ``start_keyed_sink``, whose state
+stage is always ``session.state_partitions`` wide, so the shuffle-width
+regime does not reach their state; the scan-split regimes still do. Two
+tests pin a stream twin's independence from its state-partition count,
+both against the batch twin: ``test_default_keyed_sink_matches_batch_twin``
+(1 state partition) and ``test_keyed_sink_restarts_old_partition_checkpoint``
+(a checkpoint made at ``defaultParallelism``), in tests/test_streaming.py.
+
 Usage:
     python scripts/determinism_sweep.py [sf_dir] [--only substr]
 

@@ -20,6 +20,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -58,7 +59,7 @@ spark = get_spark(
     master="local-cluster[2,4,4096]",
     driver_memory="4g",
     extra_confs={
-        "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="lc_warehouse_"),
+        "spark.sql.warehouse.dir": sys.argv[2],
         # executor JVMs are child processes and inherit our env, but be
         # explicit: executor-side Python workers must import masd_spark
         "spark.executorEnv.PYTHONPATH": ":".join(
@@ -98,8 +99,8 @@ try:
     # the helper runs under the RocksDB provider (TWS state uses multiple
     # column families; HDFS-backed raises UNSUPPORTED_FEATURE), same as the
     # local[8] test; under local-cluster the stores live on executors.
-    tmp = Path(tempfile.mkdtemp(prefix="lc_tws_"))
-    last, expected = _run_heavy_hitters(spark, tmp)
+    with tempfile.TemporaryDirectory(prefix="lc_tws_") as d:
+        last, expected = _run_heavy_hitters(spark, Path(d))
     assert last == expected, f"TWS mismatch: {last} != {expected}"
     tws_ok = True
 except Exception as exc:  # noqa: BLE001
@@ -199,7 +200,7 @@ WINDOW_QUERIES = (
 )
 
 _WINDOW_SCRIPT = r"""
-import json, sys, tempfile
+import json, sys
 sys.path.insert(0, "/root/repo")
 sys.path.insert(0, "/root/repo/tests")
 
@@ -212,7 +213,7 @@ spark = get_spark(
     master="local-cluster[2,4,4096]",
     driver_memory="4g",
     extra_confs={
-        "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="lc_warehouse_"),
+        "spark.sql.warehouse.dir": sys.argv[2],
         "spark.executorEnv.PYTHONPATH": ":".join(
             p for p in ["/root/repo", __import__("os").environ.get("PYTHONPATH", "")] if p
         ),
@@ -248,18 +249,19 @@ def test_local_cluster_driver_window():
     partitioning assumptions) fails here."""
     env = dict(os.environ)
     env["PYTHONPATH"] = f"{REPO}:{env.get('PYTHONPATH', '')}".rstrip(":")
-    proc = subprocess.run(
-        [sys.executable, "-c", _WINDOW_SCRIPT, json.dumps(WINDOW_QUERIES)],
-        capture_output=True,
-        text=True,
-        # 540s fit an idle box but flaked inside a full-suite run (r8:
-        # 376s isolated, >540s after 30 min of suite-induced page-cache
-        # pressure). The timeout guards against a HUNG subprocess, not
-        # a slow window — size it for the contended case.
-        timeout=1200,
-        env=env,
-        cwd=str(REPO),
-    )
+    with tempfile.TemporaryDirectory(prefix="lc_warehouse_") as warehouse:
+        proc = subprocess.run(
+            [sys.executable, "-c", _WINDOW_SCRIPT, json.dumps(WINDOW_QUERIES), warehouse],
+            capture_output=True,
+            text=True,
+            # 540s fit an idle box but flaked inside a full-suite run (r8:
+            # 376s isolated, >540s after 30 min of suite-induced page-cache
+            # pressure). The timeout guards against a HUNG subprocess, not
+            # a slow window — size it for the contended case.
+            timeout=1200,
+            env=env,
+            cwd=str(REPO),
+        )
     # marker may share a line with a stray \r-progress fragment; split on
     # the marker itself rather than requiring it at line start
     lines = [l[l.find("LCRESULT "):] for l in proc.stdout.splitlines() if "LCRESULT " in l]
@@ -272,14 +274,15 @@ def test_local_cluster_driver_window():
 def test_local_cluster_smoke():
     env = dict(os.environ)
     env["PYTHONPATH"] = f"{REPO}:{env.get('PYTHONPATH', '')}".rstrip(":")
-    proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT, json.dumps(LOCAL_CLUSTER_QUERIES)],
-        capture_output=True,
-        text=True,
-        timeout=540,
-        env=env,
-        cwd=str(REPO),
-    )
+    with tempfile.TemporaryDirectory(prefix="lc_warehouse_") as warehouse:
+        proc = subprocess.run(
+            [sys.executable, "-c", _SCRIPT, json.dumps(LOCAL_CLUSTER_QUERIES), warehouse],
+            capture_output=True,
+            text=True,
+            timeout=540,
+            env=env,
+            cwd=str(REPO),
+        )
     # marker may share a line with a stray \r-progress fragment; split on
     # the marker itself rather than requiring it at line start
     lines = [l[l.find("LCRESULT "):] for l in proc.stdout.splitlines() if "LCRESULT " in l]

@@ -34,7 +34,6 @@ from masd_spark.operators.dedup import (
     dedup_exact,
     jaccard_pairs,
     minhash_lsh_pairs,
-    minhash_signatures,
     shingle_rows,
 )
 from masd_spark.operators.similarity import cosine_pairs, cosine_pairs_bucketed
@@ -145,8 +144,7 @@ def boilerplate_corpus(spark):
 
 def test_minhash_hot_band_bucket_measured_and_bounded(boilerplate_corpus):
     sh = shingle_rows(boilerplate_corpus)
-    sigs = minhash_signatures(boilerplate_corpus, "doc_id", "text", shingles=sh)
-    banded = band_rows(sigs, "doc_id", 16, 4)
+    banded = band_rows(sh, "doc_id", 16, 4)
     occ = banded.groupBy("band", "band_hash").agg(F.count(F.lit(1)).alias("n"))
     hot = occ.agg(F.max("n")).first()[0]
     assert hot >= 150, "identical docs must share every band bucket"

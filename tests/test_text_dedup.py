@@ -620,18 +620,75 @@ def test_incremental_dedup_excludes_history(spark):
     assert dups == 0
 
 
-def test_shingle_mapside_equals_window_lead(spark):
-    """The shuffle-free shingle builder must produce the identical
-    (id, shingle, set_size) multiset as the window-lead default."""
-    from masd_spark.operators.dedup import shingle_rows, shingle_rows_mapside
+# Null text, empty text, fewer than k tokens, whitespace runs (trim only
+# strips spaces, so the tabs and newlines sit inside), repeated k-grams
+# and a null id.
+_KGRAM_EDGE_ROWS = [
+    (1, None),
+    (2, ""),
+    (3, "a b"),
+    (4, "  The  quick\tbrown \n\n fox  jumps "),
+    (5, "x y x y x y x"),
+    (None, "a null id still has tokens"),
+]
+
+
+def _ref_kgrams(rows, k):
+    """Pure-Python reference: (id, pos, kgram) for every positional k-gram
+    and (id, shingle, set_size) for every row's distinct k-grams."""
+    from collections import Counter
+
+    positional, distinct = Counter(), Counter()
+    for d, text in rows:
+        ts = (text or "").strip().lower().split()
+        grams = [" ".join(ts[i : i + k]) for i in range(len(ts) - k + 1)]
+        positional.update((d, i, g) for i, g in enumerate(grams))
+        distinct.update((d, g, len(set(grams))) for g in set(grams))
+    return positional, distinct
+
+
+def test_kgram_builder_matches_python_reference(spark):
+    """The one k-gram builder (positional rows) and shingle_rows (distinct
+    per row, with set_size) equal the whitespace-window reference on the
+    sf0.01 documents and on the edge frame, for k = 3 and 5. The shared
+    shingle set of a single-row-group documents file is not built by one
+    task: the builder hash-partitions the rows by id, so the sf0.1 set
+    lands in more than one partition."""
+    from collections import Counter
+
+    from masd_spark.operators.dedup import shingle_rows
+    from masd_spark.operators.text import kgrams
+    from masd_spark.queries.dedup import _shared_shingles
     from masd_spark.sources.tables import load_table
 
-    docs = load_table(spark, SF_ORACLE, "documents")
-    a = sorted(map(tuple, shingle_rows(docs, materialize=False).collect()))
-    b = sorted(
-        map(tuple, shingle_rows_mapside(docs, materialize=False).collect())
-    )
-    assert a == b and len(a) > 0
+    docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
+    frames = {
+        "sf0.01": (docs, [tuple(r) for r in docs.collect()]),
+        "edge": (
+            spark.createDataFrame(_KGRAM_EDGE_ROWS, "doc_id long, text string"),
+            _KGRAM_EDGE_ROWS,
+        ),
+    }
+    for name, (df, rows) in frames.items():
+        for k in (3, 5):
+            positional, distinct = _ref_kgrams(rows, k)
+            got_pos = Counter(
+                tuple(r)
+                for r in kgrams(df, "doc_id", "text", k)
+                .select("doc_id", F.posexplode("kgrams"))
+                .collect()
+            )
+            got_sh = Counter(
+                tuple(r)
+                for r in shingle_rows(df, k=k, materialize=False)
+                .select("doc_id", "shingle", "set_size")
+                .collect()
+            )
+            assert got_pos == positional and len(positional) > 0, (name, k)
+            assert got_sh == distinct, (name, k)
+
+    sizes = _shared_shingles(spark, "/root/testdata/sf0.1").rdd.glom().map(len).collect()
+    assert sum(n > 0 for n in sizes) >= min(2, spark.sparkContext.defaultParallelism)
 
 
 def test_pii_report_detects_injected_and_flags(spark):
