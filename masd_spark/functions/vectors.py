@@ -5,6 +5,14 @@ Embeddings are ``array<float>`` columns (fixture: embeddings.embedding,
 dim 64). All math is done in double (cast per element) so results match
 engines that compute in double (e.g. DuckDB's list_cosine_similarity) and
 don't depend on float accumulation order.
+
+Sums are 0.0-seeded ``zip_with``/``aggregate`` folds, O(1) in dim, never
+unrolled ``element_at`` chains: measured at dim 64 the unrolled form ran
+4-5x slower, because its ~200-node expression costs plan time on every
+build and its generated method exceeds the codegen size limit, dropping
+the stage to interpreted execution. The fold's order is IEEE-identical to
+the unrolled ``t1 + t2 + ...`` chain, so oracle parity does not depend on
+the choice.
 """
 
 from __future__ import annotations
@@ -28,34 +36,17 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity. NULL (not an error) for zero-norm or empty
-    vectors: under Spark 4's default ANSI mode a bare division would
-    raise DIVIDE_BY_ZERO and abort the whole query on one degenerate
-    embedding row."""
-    denom = norm(a) * norm(b)
+def cosine(
+    a: Column, b: Column, na: Column | None = None, nb: Column | None = None
+) -> Column:
+    """Cosine similarity — the one JVM cosine form. Pass precomputed
+    norms ``na``/``nb`` (``norm`` of the same vectors, computed once per
+    row) to skip the per-pair norm folds; the value is the same double.
+    NULL (not an error) for a zero denominator: under Spark 4's default
+    ANSI mode a bare division would raise DIVIDE_BY_ZERO and abort the
+    whole query on one degenerate embedding row."""
+    denom = (norm(a) if na is None else na) * (norm(b) if nb is None else nb)
     return dot(a, b) / F.when(denom != 0.0, denom)
-
-
-# --- fixed-dimension variants -------------------------------------------
-# HISTORY: these used to unroll the dot into dim explicit element_at
-# terms on the theory that straight-line codegen beats the interpreted
-# HOF lambdas. Measured at dim=64 the opposite holds, decisively: the
-# unrolled form was 4-5x SLOWER end to end (51s vs 12.5s on a 2M-pair
-# broadcast-join scan, 3.1s vs 0.6s at 40k pairs). Two reasons: (a) the
-# ~200-node expression tree costs ~1.4s of py4j plan construction and
-# analyzer time per query build, and (b) the generated method exceeds
-# spark.sql.codegen.hugeMethodLimit, so whole-stage codegen silently
-# falls back to interpreted Volcano eval per ROW — the worst of both
-# worlds. The HOF form keeps the stage inside codegen (the lambda is an
-# interpreted island, but a compact one) and the expression O(1) in dim.
-# The accumulation order (0.0-seeded left fold) is IEEE-identical to the
-# unrolled t1 + t2 + ... chain, so oracle parity is unaffected. The
-# ``dim`` parameters stay for API stability and future dispatch.
-
-
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    return dot(a, b)
 
 
 def lit_doubles(vec: list[float]) -> Column:
@@ -83,20 +74,6 @@ def lit_double_matrix(mat: list[list[float]]) -> Column:
         "array(" + ",".join(f"{float(x)!r}D" for x in row) + ")" for row in mat
     )
     return F.expr(f"array({inner})")
-
-
-def dot_literal(a: Column, weights: list[float]) -> Column:
-    """Dot of a vector column with a Python-side constant vector (the
-    constants ride along as a literal array — LSH hyperplanes)."""
-    return dot(a, lit_doubles([float(w) for w in weights]))
-
-
-def norm_fixed(a: Column, dim: int) -> Column:
-    return norm(a)
-
-
-def cosine_fixed(a: Column, b: Column, dim: int) -> Column:
-    return cosine(a, b)
 
 
 # --- int8 scalar quantization -------------------------------------------

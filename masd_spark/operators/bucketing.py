@@ -19,15 +19,26 @@ from pyspark.sql import DataFrame, SparkSession
 def write_bucketed(
     df: DataFrame,
     table_name: str,
-    bucket_col: str,
+    bucket_col: str | None,
     n_buckets: int = 8,
     sort_col: str | None = None,
+    path: str | None = None,
+    mode: str = "overwrite",
 ) -> None:
-    """Save as a bucketed (optionally sorted) managed table. Sorting within
-    buckets additionally removes the sort from later sort-merge joins."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
+    """Save as a bucketed (optionally sorted) table. Sorting within
+    buckets additionally removes the sort from later sort-merge joins.
+    ``path`` makes it an EXTERNAL table at that location (managed in the
+    warehouse dir otherwise); ``mode="append"`` adds rows, and Spark
+    rejects a bucket spec that differs from the table's. ``bucket_col``
+    None writes a plain table — the small metadata tables an index keeps
+    beside its bucketed rows."""
+    writer = df.write.mode(mode)
+    if bucket_col is not None:
+        writer = writer.bucketBy(n_buckets, bucket_col)
     if sort_col:
         writer = writer.sortBy(sort_col)
+    if path is not None:
+        writer = writer.option("path", path)
     writer.saveAsTable(table_name)
 
 

@@ -20,7 +20,11 @@ from pyspark.sql import functions as F
 
 from masd_spark.functions.quantize import qround6
 from masd_spark.functions.vectors import dot, lit_double_matrix, lit_doubles
-from masd_spark.operators.similarity import valid_vectors
+from masd_spark.operators.similarity import (
+    cosine_pairs,
+    valid_vector,
+    valid_vectors,
+)
 
 
 def _assign_expr(cents: list[list[float]], vec_col: str):
@@ -272,8 +276,10 @@ def semantic_dedup(
 
     Returns (id, cluster, keep boolean) for every input row.
 
-    Scale shape: the pairwise stage is an EQUI-join on cluster id, so
-    cost is sum over clusters of c_i^2, never corpus^2 — and k grows
+    Scale shape: the pairwise stage is :func:`cosine_pairs` with
+    ``group_col="cluster"`` (the NumPy kernel or the JVM equi-join on
+    cluster id, whichever the input selects), so cost is sum over
+    clusters of c_i^2, never corpus^2 — and k grows
     with the corpus to hold c_i bounded (the published SemDeDup recipe).
     Precision is exact (real cosine on every candidate); recall is
     bounded by co-clustering — a cross-cluster near-dup pair is missed
@@ -283,8 +289,6 @@ def semantic_dedup(
     also dropped by the exact O(n^2) dedup — asserted in
     tests/test_similarity.py.
     """
-    from masd_spark.functions.vectors import dot_fixed, norm_fixed
-
     df = valid_vectors(df, id_col, vec_col)
     # callers may inject a precomputed (id, cluster) assignment — e.g. the
     # integer-Lloyd one, which makes the whole pipeline oracle-checkable
@@ -296,81 +300,19 @@ def semantic_dedup(
             seed=seed,
         ).select(id_col, "cluster")
     )
-    with_norm = (
+    members = (
         df.join(assigned, id_col)
-        .select(
-            F.col(id_col),
-            "cluster",
-            F.col(vec_col),
-            norm_fixed(F.col(vec_col), dim).alias("_n"),
-        )
-        .localCheckpoint(eager=True)  # reused by both join sides + output
+        .select(F.col(id_col), "cluster", F.col(vec_col))
+        .localCheckpoint(eager=True)  # read by the scorer and the output
     )
-    # Optimization r8 (guide §4.2): the intra-cluster pair scoring is the
-    # same all-pairs cosine as cosine_pairs, restricted to equal cluster
-    # ids — run it through the shared bit-exact mapInArrow kernel (bucket
-    # column = cluster) instead of the JVM equi-join + per-pair HOF fold.
-    # The JVM re-applies the identical round+threshold filter, so the
-    # dropped-id set is unchanged (pinned in tests/test_similarity.py).
-    from masd_spark.operators import similarity as _sim
-
-    dropped = None
-    if _sim._ARROW_PAIRS and _sim._integral_id_type(with_norm, id_col):
-        narrow = with_norm.select(
-            F.col(id_col), F.col(vec_col), F.col("cluster").cast("long")
-        )
-        tab = narrow.toArrow()
-        if tab.num_rows <= _sim._ARROW_PAIRS_MAX:
-            from pyspark.sql import types as T
-
-            groups = _sim._pairs_corpus_groups(tab)
-            id_type = with_norm.schema[id_col].dataType
-            out_schema = T.StructType(
-                [
-                    T.StructField("__ida", T.LongType()),
-                    T.StructField("__idb", T.LongType()),
-                    T.StructField("__cos", T.DoubleType()),
-                ]
-            )
-            dropped = (
-                narrow.mapInArrow(
-                    _sim._pairs_arrow_kernel(groups, threshold), out_schema
-                )
-                .filter(F.round(F.col("__cos"), 6) >= threshold)
-                .select(F.col("__idb").cast(id_type).alias(id_col))
-                .distinct()
-                .withColumn("_dropped", F.lit(True))
-            )
-    if dropped is None:
-        a = with_norm.select(
-            F.col(id_col).alias("id_a"),
-            F.col("cluster"),
-            F.col(vec_col).alias("_va"),
-            F.col("_n").alias("_na"),
-        )
-        b = with_norm.select(
-            F.col(id_col).alias("id_b"),
-            F.col("cluster"),
-            F.col(vec_col).alias("_vb"),
-            F.col("_n").alias("_nb"),
-        )
-        dropped = (
-            a.join(b, "cluster")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(
-                F.round(
-                    dot_fixed(F.col("_va"), F.col("_vb"), dim)
-                    / (F.col("_na") * F.col("_nb")),
-                    6,
-                )
-                >= threshold
-            )
-            .select(F.col("id_b").alias(id_col))
-            .distinct()
-            .withColumn("_dropped", F.lit(True))
-        )
+    dropped = (
+        cosine_pairs(members, threshold, id_col, vec_col, group_col="cluster")
+        .select(F.col("id_b").alias(id_col))
+        .distinct()
+        .withColumn("_dropped", F.lit(True))
+    )
     return (
-        with_norm.select(id_col, "cluster")
+        members.select(id_col, "cluster")
         .join(dropped, id_col, "left")
         .select(
             id_col,
@@ -411,18 +353,10 @@ def pca_top_component(
     import numpy as np
 
     # invalid-input contract (no id column here): null vectors carry no
-    # Gram contribution and would crash np.asarray; a non-finite element
-    # would poison the whole Gram partial — both excluded (the id-keyed
-    # paths get the same rule from valid_vectors)
-    df = df.filter(
-        F.col(vec_col).isNotNull()
-        & ~F.exists(
-            F.col(vec_col),
-            # null-explicit, matching valid_vectors: a NULL element must be
-            # named invalid, not dropped via three-valued-logic accident
-            lambda x: x.isNull() | F.isnan(x) | (F.abs(x) == F.lit(float("inf"))),
-        )
-    )
+    # Gram contribution and would crash np.asarray, a non-finite element
+    # would poison the whole Gram partial, and a zero-norm vector is
+    # excluded so n matches the id-keyed paths' valid_vectors count
+    df = df.filter(valid_vector(F.col(vec_col)))
     iu = np.triu_indices(dim)
     width = 1 + dim + iu[0].size  # n, s, upper-tri(P)
 

@@ -47,6 +47,7 @@ from fractions import Fraction
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from masd_spark.operators.bucketing import write_bucketed
 from masd_spark.operators.skew import drop_overfull_buckets
 from masd_spark.operators.text import fingerprint_md5, kgrams, simhash32, tokens
 
@@ -1083,22 +1084,18 @@ def build_minhash_index(
     bands = drop_overfull_buckets(
         band_rows(sh, id_col, n_hashes, n_bands), ["band", "band_hash"], max_bucket
     )
-    w = bands.write.mode("overwrite").bucketBy(n_buckets, "band_hash")
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(table_name)
-    ws = sh.write.mode("overwrite").bucketBy(n_buckets, id_col)
-    if path is not None:
-        ws = ws.option("path", path + "_shingles")
-    ws.saveAsTable(table_name + "_shingles")
+    write_bucketed(bands, table_name, "band_hash", n_buckets, path=path)
+    write_bucketed(
+        sh, table_name + "_shingles", id_col, n_buckets,
+        path=path and path + "_shingles",
+    )
     params = spark.createDataFrame(
         [(k, n_hashes, n_bands, max_bucket)],
         schema="k INT, n_hashes INT, n_bands INT, max_bucket INT",
     )
-    wp = params.write.mode("overwrite")
-    if path is not None:
-        wp = wp.option("path", path + "_params")
-    wp.saveAsTable(table_name + "_params")
+    write_bucketed(
+        params, table_name + "_params", None, path=path and path + "_params"
+    )
 
 
 def load_minhash_params(spark, table_name: str) -> dict:
@@ -1132,9 +1129,9 @@ def append_minhash_index(
     p = load_minhash_params(spark, table_name)
     sh = shingle_rows(new_docs, id_col, text_col, p["k"])
     bands = band_rows(sh, id_col, p["n_hashes"], p["n_bands"])
-    bands.write.mode("append").bucketBy(n_buckets, "band_hash").saveAsTable(table_name)
-    sh.write.mode("append").bucketBy(n_buckets, id_col).saveAsTable(
-        table_name + "_shingles"
+    write_bucketed(bands, table_name, "band_hash", n_buckets, mode="append")
+    write_bucketed(
+        sh, table_name + "_shingles", id_col, n_buckets, mode="append"
     )
 
 

@@ -1,59 +1,77 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
+Every top-k operator here is one scoring step plus one ranking step.
+Scoring is either a bit-exact NumPy kernel over Arrow batches or the one
+JVM cosine form (functions/vectors.py:cosine, norms computed once per
+row); ranking is :func:`_rank_topk` on (rounded cosine desc, id asc) — a
+total order, so results are deterministic and engine-portable.
 
 - brute_force_topk: exact top-k cosine for a (small) query set against the
-  full corpus. Queries are broadcast; the corpus is scanned once; the
-  top-k per query is a TakeOrdered-style window, so no all-pairs shuffle
-  materializes. Exact baseline and the oracle-checkable ground truth.
-- lsh_topk: random-hyperplane LSH — sign-bit bucket per vector, candidates
-  share a bucket (optionally within Hamming-adjacent buckets), exact
-  cosine re-rank of candidates. The 100 TB path: bucket cardinality
-  bounds the join, never corpus x queries. Recall is approximate;
-  measured against brute force in tests.
-- embedding near-dup pairs: all pairs with cosine >= threshold via
-  bucketed self-join (brute force at fixture scale, LSH-bucketed at real
-  scale).
+  full corpus — the exact baseline and the oracle-checkable ground truth.
+- lsh_topk / ivf_topk / pq_topk / ivfpq_topk: approximate candidate
+  generation (hyperplane buckets, IVF cells, PQ codes) bounded by bucket
+  or cell occupancy, never corpus x queries, then an exact cosine re-rank.
+  Recall is measured against brute force in tests.
+- cosine_pairs / cosine_pairs_bucketed: embedding near-dup pairs with
+  cosine >= threshold — all pairs (optionally within a group column) at
+  fixture scale, LSH-bucketed candidates at real scale.
 
-All vector math uses built-in higher-order functions (functions/vectors.py)
-in double precision — no UDFs, no Python row path.
+All vector math is done in double precision; no UDFs, no Python row path.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from masd_spark.operators.skew import drop_overfull_buckets
 from masd_spark.functions.vectors import (
     cosine,
-    cosine_fixed,
     dot,
-    dot_fixed,
-    dot_literal,
     lit_double_matrix,
     lit_doubles,
     norm,
-    norm_fixed,
 )
+from masd_spark.operators.bucketing import write_bucketed
+from masd_spark.operators.relational import topk_per_group
+from masd_spark.operators.skew import drop_overfull_buckets
+
+
+def valid_vector(vec: Column) -> Column:
+    """The embedding family's per-vector validity predicate (see
+    :func:`valid_vectors`): non-null, every element finite and non-null,
+    and a non-zero norm."""
+    bad = F.exists(
+        vec, lambda x: x.isNull() | F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
+    )
+    nonzero = F.exists(
+        vec, lambda x: x.cast("double") * x.cast("double") != F.lit(0.0)
+    )
+    return vec.isNotNull() & ~bad & nonzero
 
 
 def valid_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """Invalid-input contract for the embedding family: a row with a null
-    id, a null vector, or a vector carrying ANY non-finite element
-    (NaN/Inf from upstream feature-extraction overflow) cannot be
-    indexed, bucketed, sampled, or returned as a neighbor — it is
-    EXCLUDED up front on every path (corpus, query, and index-build
-    sample alike). A no-op scan filter on clean data; on dirty data it
-    (a) keeps the md5-ordered portable samples identical across engines
-    (null ids hash to NULL and the engines disagree on NULL sort order),
-    (b) keeps null vectors out of driver-side ``float()`` literal
-    builds, and (c) keeps NaN/Inf out of distances, quantizers, Gram
-    sums, and centroid means, where one poisoned element otherwise
-    aborts ANSI integer casts or propagates NaN into every aggregate it
-    touches. The oracle twin is queries/__init__.py:valid_embeddings.
+    id, a null vector, a vector carrying ANY non-finite element
+    (NaN/Inf from upstream feature-extraction overflow), or a vector
+    with a zero norm (all elements zero, or empty) cannot be indexed,
+    bucketed, sampled, or returned as a neighbor — it is EXCLUDED up
+    front on every path (corpus, query, and index-build sample alike).
+    A no-op scan filter on clean data; on dirty data it (a) keeps the
+    md5-ordered portable samples identical across engines (null ids hash
+    to NULL and the engines disagree on NULL sort order), (b) keeps null
+    vectors out of driver-side ``float()`` literal builds, (c) keeps
+    NaN/Inf out of distances, quantizers, Gram sums, and centroid means,
+    where one poisoned element otherwise aborts ANSI integer casts or
+    propagates NaN into every aggregate it touches, and (d) keeps 0/0
+    out of every cosine: a zero-norm vector has no direction, and each
+    engine resolved the 0/0 differently (NaN ranked first by the NumPy
+    kernels, NULL ranked last by ``cosine()``, a DIVIDE_BY_ZERO abort
+    under ANSI, -1.0 from DuckDB's ``list_cosine_similarity``). The norm
+    test is ``x * x != 0`` in double for some element — exactly the
+    vectors whose folded norm is non-zero, so no path ever divides by a
+    zero norm. The oracle twin is queries/__init__.py:valid_embeddings.
 
     The element predicate is null-explicit (``x.isNull() | isnan | inf``):
     without the isNull arm, Spark's three-valued logic makes ``~exists``
@@ -62,19 +80,33 @@ def valid_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     NULL predicate as false (row kept) — the engines would diverge on
     exactly that dirty shape. Both sides now name the case: a NULL
     element is invalid input, same as NaN/Inf."""
-    finite = ~F.exists(
-        F.col(vec_col),
-        lambda x: x.isNull() | F.isnan(x) | (F.abs(x) == F.lit(float("inf"))),
-    )
-    return df.filter(
-        F.col(id_col).isNotNull() & F.col(vec_col).isNotNull() & finite
-    )
+    return df.filter(F.col(id_col).isNotNull() & valid_vector(F.col(vec_col)))
 
 
-# Escape hatch for the equality pin (tests/test_similarity.py): False
-# routes brute_force_topk's fixed-dim path back to the pure-JVM HOF
-# join, the reference the Arrow kernel must match row-for-row.
-_ARROW_TOPK = True
+def _rank_topk(
+    scored: DataFrame,
+    k: int,
+    query_id_col: str,
+    id_col: str,
+    score_col: str = "cos_sim",
+    rank_col: str = "rank",
+) -> DataFrame:
+    """The family's ranker: the top ``k`` rows per query by
+    (``score_col`` desc with NULLs last, ``id_col`` asc) — a total
+    order, so results are deterministic and engine-portable — as
+    (query, id, score, ``rank_col`` bigint)."""
+    return topk_per_group(
+        scored,
+        [query_id_col],
+        [F.col(score_col).desc(), F.col(id_col)],
+        k,
+        rank_col,
+    ).select(
+        query_id_col,
+        id_col,
+        score_col,
+        F.col(rank_col).cast("bigint").alias(rank_col),
+    )
 
 
 def _bf_arrow_kernel(q_groups, q_mismatch, k, qid_pa_type):
@@ -138,11 +170,7 @@ def _bf_arrow_kernel(q_groups, q_mismatch, k, qid_pa_type):
                     rows.size, length
                 )
                 # left-fold norms and dots, column-stepped (see docstring)
-                cacc = np.zeros(rows.size)
-                for j in range(length):
-                    cj = cmat[:, j]
-                    cacc = cacc + cj * cj
-                cn = np.sqrt(cacc)
+                cn = _fold_norms(cmat)
                 dots = np.zeros((rows.size, len(qids)))
                 for j in range(length):
                     dots = dots + cmat[:, j][:, None] * qmat[:, j][None, :]
@@ -191,136 +219,101 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query vector.
 
-    ``queries`` must be small enough to broadcast (the ``dim=None`` path
-    hints it; the vectorized path collects it — same size contract);
-    ranking uses (rounded cosine desc, id asc) — a total order, so
-    results are deterministic and engine-portable.
-
-    Optimization r8 (guide §4.2): with ``dim`` set, the scoring runs as
-    one ``mapInArrow`` over the corpus scan — whole Arrow batches handed
-    to a NumPy kernel that reproduces the JVM HOF fold BIT-EXACTLY (see
-    :func:`_bf_arrow_kernel`) and emits, per batch, only the rows that
-    can reach the global top-k. The JVM then rounds and ranks that
-    candidate superset with the identical window, so emitted rows are
-    unchanged (equality with the HOF path pinned by test). Measured at
-    sf0.1 (10k vectors x 100 queries): 1.0s -> ~0.3s warm, and the
-    per-pair zip_with allocation disappears from the hot path. The
-    ``dim=None`` path keeps the pure-JVM HOF shape.
+    ``queries`` is collected to the driver, so it must be small (the
+    same size contract as a broadcast side). Scoring is one
+    ``mapInArrow`` over the corpus scan: a NumPy kernel that reproduces
+    the JVM cosine BIT-EXACTLY (see :func:`_bf_arrow_kernel`) and emits,
+    per batch, only the rows that can reach the global top-k; the JVM
+    then rounds and ranks that superset with :func:`_rank_topk`, so the
+    rows equal the JVM reference's (:func:`_brute_force_topk_jvm`,
+    pinned by test). Why a kernel: the JVM form allocates a zip_with
+    array per pair; at sf0.1 (10k vectors x 100 queries) the kernel
+    measured 1.0s -> ~0.3s warm.
     """
+    import numpy as np
+    from pyspark.sql import types as T
+
     corpus = valid_vectors(corpus, id_col, vec_col)
     queries = valid_vectors(queries, query_id_col, vec_col)
-    if dim is not None and _ARROW_TOPK:
-        import numpy as np
-
-        from pyspark.sql import types as T
-
-        qtab = queries.select(query_id_col, vec_col).toArrow()
-        qid_pa_type = qtab.schema.field(0).type
-        q_rows = [
-            (i, qtab.column(0)[i].as_py(), qtab.column(1)[i].as_py())
-            for i in range(qtab.num_rows)
+    qtab = queries.select(query_id_col, vec_col).toArrow()
+    qid_pa_type = qtab.schema.field(0).type
+    q_rows = [
+        (i, qtab.column(0)[i].as_py(), qtab.column(1)[i].as_py())
+        for i in range(qtab.num_rows)
+    ]
+    q_groups: dict = {}
+    for i, qid, vec in q_rows:
+        q_groups.setdefault(len(vec), []).append((i, qid, vec))
+    packed = {}
+    for length, rows in q_groups.items():
+        qmat = np.array([v for _, _, v in rows], dtype=np.float64)
+        packed[length] = (
+            [(i, qid) for i, qid, _ in rows],
+            qmat,
+            _fold_norms(qmat),
+        )
+    q_mismatch = [(qid, len(vec)) for _, qid, vec in q_rows]
+    corpus_id_type = corpus.schema[id_col].dataType
+    qid_spark_type = queries.schema[query_id_col].dataType
+    out_schema = T.StructType(
+        [
+            T.StructField("__qid", qid_spark_type),
+            T.StructField("__cid", corpus_id_type),
+            T.StructField("__cos", T.DoubleType()),
         ]
-        q_groups: dict = {}
-        for i, qid, vec in q_rows:
-            q_groups.setdefault(len(vec), []).append((i, qid, vec))
-        packed = {}
-        for length, rows in q_groups.items():
-            qmat = np.array([v for _, _, v in rows], dtype=np.float64)
-            qacc = np.zeros(len(rows))
-            for j in range(length):
-                qj = qmat[:, j]
-                qacc = qacc + qj * qj
-            packed[length] = (
-                [(i, qid) for i, qid, _ in rows],
-                qmat,
-                np.sqrt(qacc),
-            )
-        q_mismatch = [(qid, len(vec)) for _, qid, vec in q_rows]
-        corpus_id_type = corpus.schema[id_col].dataType
-        qid_spark_type = queries.schema[query_id_col].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField("__qid", qid_spark_type),
-                T.StructField("__cid", corpus_id_type),
-                T.StructField("__cos", T.DoubleType()),
-            ]
-        )
-        scored = (
-            corpus.select(F.col(id_col), F.col(vec_col))
-            .mapInArrow(
-                _bf_arrow_kernel(packed, q_mismatch, k, qid_pa_type),
-                out_schema,
-            )
-            .select(
-                F.col("__qid").alias(query_id_col),
-                F.col("__cid").alias(id_col),
-                F.round(F.col("__cos"), 6).alias("cos_sim"),
-            )
-        )
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.col("cos_sim").desc(), F.col(id_col)
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                query_id_col,
-                id_col,
-                "cos_sim",
-                F.col("rank").cast("bigint").alias("rank"),
-            )
-        )
-    if dim is None:
-        q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
-        pairs = corpus.join(F.broadcast(q), F.col(id_col) != F.col(query_id_col))
-        scored = pairs.select(
-            query_id_col,
-            id_col,
-            F.round(cosine(F.col("_qvec"), F.col(vec_col)), 6).alias("cos_sim"),
-        )
-    else:
-        q = queries.select(
-            F.col(query_id_col),
-            F.col(vec_col).alias("_qvec"),
-            norm_fixed(F.col(vec_col), dim).alias("_qn"),
-        )
-        c = corpus.select(
-            F.col(id_col),
-            F.col(vec_col),
-            norm_fixed(F.col(vec_col), dim).alias("_cn"),
-        )
-        pairs = c.join(F.broadcast(q), F.col(id_col) != F.col(query_id_col))
-        scored = pairs.select(
-            query_id_col,
-            id_col,
-            F.round(
-                dot_fixed(F.col("_qvec"), F.col(vec_col), dim)
-                / (F.col("_qn") * F.col("_cn")),
-                6,
-            ).alias("cos_sim"),
-        )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    scored = (
+        corpus.select(F.col(id_col), F.col(vec_col))
+        .mapInArrow(
+            _bf_arrow_kernel(packed, q_mismatch, k, qid_pa_type),
+            out_schema,
+        )
         .select(
-            query_id_col,
-            id_col,
-            "cos_sim",
-            F.col("rank").cast("bigint").alias("rank"),
+            F.col("__qid").alias(query_id_col),
+            F.col("__cid").alias(id_col),
+            F.round(F.col("__cos"), 6).alias("cos_sim"),
         )
     )
+    return _rank_topk(scored, k, query_id_col, id_col)
 
 
-# Escape hatch for the equality pin (tests/test_similarity.py): False
-# routes cosine_pairs back to the pure-JVM theta-join reference.
-_ARROW_PAIRS = True
+def _brute_force_topk_jvm(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+) -> DataFrame:
+    """The JVM form of :func:`brute_force_topk` and the reference its
+    kernel is pinned against: broadcast the queries, score every
+    (query, corpus) pair with the one JVM cosine, rank."""
+    corpus = valid_vectors(corpus, id_col, vec_col)
+    queries = valid_vectors(queries, query_id_col, vec_col)
+    q = queries.select(
+        F.col(query_id_col),
+        F.col(vec_col).alias("_qvec"),
+        norm(F.col(vec_col)).alias("_qn"),
+    )
+    c = corpus.select(
+        F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("_cn")
+    )
+    scored = c.join(
+        F.broadcast(q), F.col(id_col) != F.col(query_id_col)
+    ).select(
+        query_id_col,
+        id_col,
+        F.round(
+            cosine(F.col("_qvec"), F.col(vec_col), F.col("_qn"), F.col("_cn")),
+            6,
+        ).alias("cos_sim"),
+    )
+    return _rank_topk(scored, k, query_id_col, id_col)
+
+
 # Driver-memory guard for the vectorized all-pairs path: the corpus is
 # collected once and closed over (like brute_force_topk's query set).
 # Aligned with queries/dedup.py:_SEMDEDUP_VERIFY_CAP — the largest corpus
@@ -328,11 +321,11 @@ _ARROW_PAIRS = True
 _ARROW_PAIRS_MAX = 500_000
 
 
-def _integral_id_type(df: DataFrame, id_col: str) -> bool:
+def _integral_type(df: DataFrame, col: str) -> bool:
     from pyspark.sql import types as T
 
     return isinstance(
-        df.schema[id_col].dataType,
+        df.schema[col].dataType,
         (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
     )
 
@@ -376,14 +369,9 @@ def _pairs_corpus_groups(tab):
     length): (ids int64, C float64 (m x L), cn float64)} with the same
     column-stepped left-fold norms the JVM expression computes. With no
     bucket column every row lands in bucket 0 (the all-pairs case); a
-    third column restricts pairing to equal buckets (semantic_dedup's
-    cluster equi-join). Raises on a zero-norm vector whenever the JVM
-    reference would score a pair against it — i.e. its (bucket, length)
-    group holds >= 2 rows, so the unguarded dot / (na * nb) division
-    aborts with DIVIDE_BY_ZERO under ANSI on that corpus shape.
-    (A zero-norm row whose group is a singleton pairs only across
-    lengths, where zip_with pads the dot to NULL and no division error
-    can fire — such corpora keep their JVM behavior: no pairs.)"""
+    third column restricts pairing to equal buckets (cosine_pairs'
+    ``group_col``). Norms are non-zero: the input passed
+    :func:`valid_vectors`."""
     import numpy as np
     import pyarrow as pa
 
@@ -406,16 +394,7 @@ def _pairs_corpus_groups(tab):
         for length, (gids, cmat) in _length_grouped(
             ids_pa.take(idx), vecs_pa.take(idx)
         ).items():
-            cn = _fold_norms(cmat)
-            if gids.size >= 2 and np.any(cn == 0.0):
-                raise ValueError(
-                    "cosine pair scoring: zero-norm vector in a pairing "
-                    "group with >= 2 rows — the JVM reference divides by "
-                    "(na * nb) and aborts with DIVIDE_BY_ZERO under "
-                    "ANSI; no vectorized behavior can match it. Drop "
-                    "zero vectors upstream."
-                )
-            groups[(int(bkt), length)] = (gids, cmat, cn)
+            groups[(int(bkt), length)] = (gids, cmat, _fold_norms(cmat))
     return groups
 
 
@@ -432,8 +411,8 @@ def _pairs_arrow_kernel(groups, threshold: float):
     original rows. Pairs of mismatched lengths are never emitted: the
     JVM's zip_with pads them to a NULL dot, and ``NULL >= threshold``
     drops the row. An optional third input column restricts pairing to
-    equal bucket values (the cluster equi-join of semantic_dedup); with
-    two columns everything is one bucket (the all-pairs theta-join).
+    equal bucket values (cosine_pairs' ``group_col``); with two columns
+    everything is one bucket (the all-pairs theta-join).
     Each unordered pair is emitted exactly once, by the task whose input
     batch holds the smaller id."""
 
@@ -505,34 +484,37 @@ def cosine_pairs(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
+    group_col: str | None = None,
 ) -> DataFrame:
     """All pairs (a < b) with cosine >= threshold — embedding near-dup.
 
-    Fixture-scale implementation is the exact self-join; at corpus scale
-    wrap it with LSH buckets (``lsh_bucket``) so the self-join happens
-    per-bucket. Norms are precomputed once per row; the per-pair dot is
-    the compact HOF fold (functions/vectors.py documents the measurement
-    that retired the unrolled variant).
+    With ``group_col`` only pairs of rows with the same non-null group
+    value are scored (semantic_dedup pairs within a k-means cluster).
+    The cost is O(n^2) per group: at corpus scale use
+    :func:`cosine_pairs_bucketed`, which verifies LSH candidates with
+    the same JVM expression.
 
-    Optimization r8 (guide §4.2): with ``dim`` set and an integral id
-    column, the O(n^2) scoring runs as one ``mapInArrow`` over the
-    corpus scan — the collected corpus (like brute_force_topk's query
-    set; guarded by ``_ARROW_PAIRS_MAX``) is closed over, each task
-    scores its scan slice against it with the bit-exact column-stepped
-    NumPy fold (:func:`_pairs_arrow_kernel`), and the JVM re-applies the
-    identical round+threshold so emitted rows are unchanged (equality
-    with the theta-join pinned by test). The theta-join reference plan
-    is kept for non-integral ids and oversized corpora.
+    The scorer is picked from the input: for integral ids (and group
+    values) on a corpus of at most ``_ARROW_PAIRS_MAX`` rows, the corpus
+    is collected and closed over, each task scores its scan slice
+    against it with the bit-exact column-stepped NumPy fold
+    (:func:`_pairs_arrow_kernel`), and the JVM re-applies the identical
+    round+threshold; otherwise :func:`_cosine_pairs_jvm` runs. Both
+    return the same rows (pinned by test). Why a kernel: the JVM form
+    allocates a zip_with array per pair of an O(n^2) join.
     """
-    df = valid_vectors(df, id_col, vec_col)
-    if dim is not None and _ARROW_PAIRS and _integral_id_type(df, id_col):
+    if _integral_type(df, id_col) and (
+        group_col is None or _integral_type(df, group_col)
+    ):
         from pyspark.sql import types as T
 
-        narrow = df.select(F.col(id_col), F.col(vec_col))
+        narrow = _pairable(df, id_col, vec_col, group_col).select(
+            F.col(id_col),
+            F.col(vec_col),
+            *([] if group_col is None else [F.col(group_col).cast("long")]),
+        )
         tab = narrow.toArrow()
         if tab.num_rows <= _ARROW_PAIRS_MAX:
-            groups = _pairs_corpus_groups(tab)
             id_type = df.schema[id_col].dataType
             out_schema = T.StructType(
                 [
@@ -542,35 +524,71 @@ def cosine_pairs(
                 ]
             )
             scored = narrow.mapInArrow(
-                _pairs_arrow_kernel(groups, threshold), out_schema
+                _pairs_arrow_kernel(_pairs_corpus_groups(tab), threshold),
+                out_schema,
             ).select(
                 F.col("__ida").cast(id_type).alias("id_a"),
                 F.col("__idb").cast(id_type).alias("id_b"),
                 F.round(F.col("__cos"), 6).alias("cos_sim"),
             )
             return scored.filter(F.col("cos_sim") >= threshold)
-    norm_expr = (
-        norm(F.col(vec_col)) if dim is None else norm_fixed(F.col(vec_col), dim)
+    return _cosine_pairs_jvm(df, threshold, id_col, vec_col, group_col)
+
+
+def _pairable(
+    df: DataFrame, id_col: str, vec_col: str, group_col: str | None
+) -> DataFrame:
+    """Rows that can form a pair: valid vectors with a non-null group
+    (a NULL group equals nothing, as in a SQL equi-join)."""
+    df = valid_vectors(df, id_col, vec_col)
+    return df if group_col is None else df.filter(F.col(group_col).isNotNull())
+
+
+def _cosine_pairs_jvm(
+    df: DataFrame,
+    threshold: float,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    group_col: str | None = None,
+) -> DataFrame:
+    """The JVM form of :func:`cosine_pairs` and the reference its kernel
+    is pinned against: a self-join on ``id_a < id_b`` (an equi-join on
+    ``group_col`` when given), verified by :func:`_verified_pairs`."""
+    keys = [] if group_col is None else [group_col]
+    a, b = _pair_sides(_pairable(df, id_col, vec_col, group_col), id_col, vec_col, keys)
+    lt = F.col("id_a") < F.col("id_b")
+    pairs = a.join(b, keys).filter(lt) if keys else a.join(b, lt)
+    return _verified_pairs(pairs, threshold)
+
+
+def _pair_sides(
+    df: DataFrame, id_col: str, vec_col: str, keys: list[str] | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides of a pair join, ``(id_a, *keys, _va, _na)`` and
+    ``(id_b, *keys, _vb, _nb)``, with norms computed once per row."""
+    keys = keys or []
+    with_norm = df.select(
+        F.col(id_col), *keys, F.col(vec_col), norm(F.col(vec_col)).alias("_n")
     )
-    with_norm = df.select(F.col(id_col), F.col(vec_col), norm_expr.alias("_n"))
-    a = with_norm.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"), F.col("_n").alias("_na")
+    a, b = (
+        with_norm.select(
+            F.col(id_col).alias(f"id_{s}"),
+            *keys,
+            F.col(vec_col).alias(f"_v{s}"),
+            F.col("_n").alias(f"_n{s}"),
+        )
+        for s in "ab"
     )
-    b = with_norm.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"), F.col("_n").alias("_nb")
-    )
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    dot_expr = (
-        dot(F.col("_va"), F.col("_vb"))
-        if dim is None
-        else dot_fixed(F.col("_va"), F.col("_vb"), dim)
-    )
-    scored = pairs.select(
-        "id_a",
-        "id_b",
-        F.round(dot_expr / (F.col("_na") * F.col("_nb")), 6).alias("cos_sim"),
-    )
-    return scored.filter(F.col("cos_sim") >= threshold)
+    return a, b
+
+
+def _verified_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
+    """The JVM pair scorer: ``(id_a, id_b, cos_sim)`` for the joined
+    :func:`_pair_sides` rows whose rounded cosine clears ``threshold``."""
+    cos = cosine(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
+    return pairs.select(
+        "id_a", "id_b", F.round(cos, 6).alias("cos_sim")
+    ).filter(F.col("cos_sim") >= threshold)
 
 
 def cosine_pairs_bucketed(
@@ -594,7 +612,8 @@ def cosine_pairs_bucketed(
     ride the dedup shuffle); candidates get an exact-cosine verification at
     ``threshold``. Cost: linear bucketing + per-bucket self-joins bounded
     by bucket occupancy (2^n_planes buckets/table) — never all-pairs.
-    Precision is exact (verification); only recall is approximate:
+    Precision is exact (verification with :func:`_verified_pairs`, the
+    JVM pair scorer of ``cosine_pairs``); only recall is approximate:
     P[candidate] = 1-(1-p^b)^L with p = 1-angle/pi, so near-identical
     pairs (the dedup regime) are found with ~certainty while low-cosine
     pairs may be missed. Measured against the exact join in
@@ -610,8 +629,6 @@ def cosine_pairs_bucketed(
     upstream — they are overfull in every table.
     """
     df = valid_vectors(df, id_col, vec_col)
-    # bucketing through the vectorized kernel (guide §4.2) — identical
-    # sign-bit buckets, pinned against the HOF plan in tests
     bucketed = bucket_rows(df, dim, n_planes, n_tables, seed, id_col, vec_col)
     bucketed = drop_overfull_buckets(bucketed, ["table", "bucket"], max_bucket)
     lhs = bucketed.select(F.col(id_col).alias("id_a"), "table", "bucket")
@@ -622,24 +639,8 @@ def cosine_pairs_bucketed(
         .select("id_a", "id_b")
         .distinct()
     )
-    with_norm = df.select(
-        F.col(id_col), F.col(vec_col), norm_fixed(F.col(vec_col), dim).alias("_n")
-    )
-    a = with_norm.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"), F.col("_n").alias("_na")
-    )
-    b = with_norm.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"), F.col("_n").alias("_nb")
-    )
-    scored = cand.join(a, "id_a").join(b, "id_b").select(
-        "id_a",
-        "id_b",
-        F.round(
-            dot_fixed(F.col("_va"), F.col("_vb"), dim) / (F.col("_na") * F.col("_nb")),
-            6,
-        ).alias("cos_sim"),
-    )
-    return scored.filter(F.col("cos_sim") >= threshold)
+    a, b = _pair_sides(df, id_col, vec_col)
+    return _verified_pairs(cand.join(a, "id_a").join(b, "id_b"), threshold)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -659,45 +660,17 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 8,
-    vec_col: str = "embedding",
-    out_col: str = "bucket",
-    seed: int = 42,
-) -> DataFrame:
-    """Random-hyperplane LSH bucket id (0..2^n_planes-1) per vector.
-
-    Bit i = sign of dot(vec, plane_i). Plane literals are constant-folded
-    into the plan (no side table, no shuffle). P[same bit] =
-    1 - angle/pi, so near-identical vectors land in the same bucket with
-    probability (1-angle/pi)^n_planes.
-    """
-    planes = _hyperplanes(dim, n_planes, seed)
-    bucket = F.lit(0).cast("bigint")
-    for i, p in enumerate(planes):
-        # HOF dot against a literal plane array: bucketing multiplies the
-        # expression by n_planes (x n_tables in _bucket_array), and the
-        # since-retired unrolled form blew a 1g driver heap at
-        # plan/codegen time here — the first sighting of the expression-
-        # size problem functions/vectors.py now documents in general.
-        plane_col = lit_doubles(p)
-        bit = F.when(dot(F.col(vec_col), plane_col) >= 0, F.lit(2**i)).otherwise(
-            F.lit(0)
-        )
-        bucket = bucket + bit
-    return df.withColumn(out_col, bucket.cast("bigint"))
-
-
 def _bucket_array(vec_col: str, dim: int, n_planes: int, n_tables: int, seed: int):
-    """array of (table, bucket) structs — one sign-bit bucket per table."""
+    """array of (table, bucket) structs — one sign-bit bucket per table:
+    bit i of a table's bucket is the sign of dot(vec, plane_i), each dot
+    a HOF fold against a literal plane array (functions/vectors.py: an
+    unrolled dot here, times n_planes x n_tables, once blew a 1g driver
+    heap at plan/codegen time)."""
     entries = []
     for t in range(n_tables):
         planes = _hyperplanes(dim, n_planes, seed + 1000 * t)
         bucket = F.lit(0).cast("bigint")
         for i, p in enumerate(planes):
-            # HOF dot — see lsh_bucket for why not dot_literal here.
             plane_col = lit_doubles(p)
             bucket = bucket + F.when(
                 dot(F.col(vec_col), plane_col) >= 0, F.lit(2**i)
@@ -708,10 +681,7 @@ def _bucket_array(vec_col: str, dim: int, n_planes: int, n_tables: int, seed: in
     return F.array(*entries)
 
 
-_ARROW_BUCKETS = True  # kill-switch for the vectorized bucketing path
-
-
-def _bucket_rows_arrow(
+def bucket_rows(
     df: DataFrame,
     dim: int,
     n_planes: int,
@@ -720,9 +690,9 @@ def _bucket_rows_arrow(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """(id, table, bucket) sign-bit LSH bucket rows via ONE ``mapInArrow``
-    pass — the vectorized twin of ``explode(_bucket_array(...))``
-    (optimization r8, guide §4.2).
+    """(id, table, bucket) sign-bit LSH bucket rows for a valid-vector
+    frame via ONE ``mapInArrow`` pass — the vectorized twin of
+    :func:`_bucket_rows_hof`.
 
     The HOF form evaluates n_tables * n_planes interpreted zip_with/
     aggregate folds per row (~1 us per element: 96 folds x 64 dims
@@ -805,7 +775,7 @@ def _bucket_rows_arrow(
     )
 
 
-def bucket_rows(
+def _bucket_rows_hof(
     df: DataFrame,
     dim: int,
     n_planes: int,
@@ -814,12 +784,8 @@ def bucket_rows(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """(id, table, bucket) rows for a valid-vector frame — Arrow kernel
-    when enabled, HOF explode otherwise (identical values either way)."""
-    if _ARROW_BUCKETS:
-        return _bucket_rows_arrow(
-            df, dim, n_planes, n_tables, seed, id_col, vec_col
-        )
+    """The HOF form of :func:`bucket_rows` and the reference its kernel
+    is pinned against: ``explode(_bucket_array(...))``."""
     return df.select(
         F.col(id_col),
         F.explode(
@@ -872,9 +838,9 @@ def ivf_topk(
     if not cent_vecs:
         return _empty_topk(corpus, queries, id_col, query_id_col)
     cents = _ivf_cents(cent_vecs)
-    assigned = _ivf_assign(corpus, cents, dim, id_col, vec_col)
+    assigned = _ivf_assign(corpus, cents, id_col, vec_col)
     return _ivf_probe(
-        assigned, queries, cents, dim, k, n_probe, id_col, vec_col, query_id_col
+        assigned, queries, cents, k, n_probe, id_col, vec_col, query_id_col
     )
 
 
@@ -914,7 +880,6 @@ def _ivf_cents(cent_vecs: list[list[float]]) -> list[tuple[int, list[float], flo
 def _ivf_assign(
     corpus: DataFrame,
     cents: list[tuple[int, list[float], float]],
-    dim: int,
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
@@ -934,16 +899,15 @@ def _ivf_assign(
     with profile evidence at a larger corpus."""
 
     def _cos_struct(cid: int, cvec: list[float], cnorm: float, norm_col):
-        # HOF dot against a literal centroid (compact expression; see
-        # lsh_bucket for why not the unrolled form here)
+        # HOF dot against a literal centroid (functions/vectors.py)
         plane = lit_doubles(cvec)
         return F.struct(
-            (dot(F.col(vec_col), plane) / (norm_col * F.lit(cnorm))).alias("c"),
+            cosine(F.col(vec_col), plane, norm_col, F.lit(cnorm)).alias("c"),
             F.lit(cid).alias("cid"),
         )
 
     c = corpus.select(
-        F.col(id_col), F.col(vec_col), norm_fixed(F.col(vec_col), dim).alias("_n")
+        F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("_n")
     )
     return c.withColumn(
         "_cid",
@@ -955,7 +919,6 @@ def _ivf_probe(
     assigned: DataFrame,
     queries: DataFrame,
     cents: list[tuple[int, list[float], float]],
-    dim: int,
     k: int,
     n_probe: int,
     id_col: str,
@@ -970,13 +933,14 @@ def _ivf_probe(
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("_qvec"),
-        norm_fixed(F.col(vec_col), dim).alias("_qn"),
+        norm(F.col(vec_col)).alias("_qn"),
     )
     probe_structs = F.array(
         *[
             F.struct(
-                (dot(F.col("_qvec"), lit_doubles(v))
-                 / (F.col("_qn") * F.lit(nn))).alias("c"),
+                cosine(
+                    F.col("_qvec"), lit_doubles(v), F.col("_qn"), F.lit(nn)
+                ).alias("c"),
                 F.lit(cid).alias("cid"),
             )
             for cid, v, nn in cents
@@ -991,21 +955,16 @@ def _ivf_probe(
     candidates = (
         assigned.join(F.broadcast(probes), "_cid")
         .filter(F.col(id_col) != F.col(query_id_col))
-        .join(F.broadcast(q.select(query_id_col, "_qvec")), query_id_col)
+        .join(F.broadcast(q), query_id_col)
     )
     scored = candidates.select(
         query_id_col,
         id_col,
-        F.round(cosine_fixed(F.col("_qvec"), F.col(vec_col), dim), 6).alias("cos_sim"),
+        F.round(
+            cosine(F.col("_qvec"), F.col(vec_col), F.col("_qn"), F.col("_n")), 6
+        ).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col, id_col, "cos_sim", F.col("rank").cast("bigint").alias("rank")
-        )
-    )
+    return _rank_topk(scored, k, query_id_col, id_col)
 
 
 def build_ivf_index(
@@ -1047,7 +1006,7 @@ def build_ivf_index(
     cent_vecs = _ivf_centroid_vecs(corpus, n_centroids, seed, id_col, vec_col, centroids)
     cents = _ivf_cents(cent_vecs)
     if cents:
-        assigned = _ivf_assign(corpus, cents, dim, id_col, vec_col)
+        assigned = _ivf_assign(corpus, cents, id_col, vec_col)
     else:
         assigned = corpus.limit(0).select(
             F.col(id_col),
@@ -1055,18 +1014,26 @@ def build_ivf_index(
             F.lit(None).cast("double").alias("_n"),
             F.lit(None).cast("int").alias("_cid"),
         )
-    writer = assigned.write.mode("overwrite").bucketBy(n_buckets, "_cid")
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table_name)
+    write_bucketed(assigned, table_name, "_cid", n_buckets, path=path)
+    _write_centroids(spark, cents, table_name, path)
+
+
+def _write_centroids(
+    spark: SparkSession,
+    cents: list[tuple[int, list[float], float]],
+    table_name: str,
+    path: str | None,
+) -> None:
+    """The ``<table_name>_centroids`` metadata table (cid, cvec) that
+    IVF and IVFPQ probers and appenders load (:func:`load_ivf_centroids`)."""
     cent_df = spark.createDataFrame(
         [(cid, [float(x) for x in v]) for cid, v, _ in cents],
         schema="cid INT, cvec ARRAY<DOUBLE>",
     )
-    cw = cent_df.write.mode("overwrite")
-    if path is not None:
-        cw = cw.option("path", path + "_centroids")
-    cw.saveAsTable(table_name + "_centroids")
+    write_bucketed(
+        cent_df, table_name + "_centroids", None,
+        path=path and path + "_centroids",
+    )
 
 
 def load_ivf_centroids(
@@ -1106,9 +1073,9 @@ def append_ivf_index(
             "non-empty corpus before appending"
         )
     assigned = _ivf_assign(
-        valid_vectors(new_rows, id_col, vec_col), cents, dim, id_col, vec_col
+        valid_vectors(new_rows, id_col, vec_col), cents, id_col, vec_col
     )
-    assigned.write.mode("append").bucketBy(n_buckets, "_cid").saveAsTable(table_name)
+    write_bucketed(assigned, table_name, "_cid", n_buckets, mode="append")
 
 
 def ivf_persisted_topk(
@@ -1136,7 +1103,7 @@ def ivf_persisted_topk(
     if not cents:
         return _empty_topk(assigned, queries, id_col, query_id_col)
     return _ivf_probe(
-        assigned, queries, cents, dim, k, n_probe, id_col, vec_col, query_id_col
+        assigned, queries, cents, k, n_probe, id_col, vec_col, query_id_col
     )
 
 
@@ -1164,8 +1131,6 @@ def lsh_topk(
     """
     corpus = valid_vectors(corpus, id_col, vec_col)
     queries = valid_vectors(queries, query_id_col, vec_col)
-    # bucketing through the vectorized kernel (guide §4.2) — identical
-    # sign-bit buckets, pinned against the HOF plan in tests
     bc = bucket_rows(corpus, dim, n_planes, n_tables, seed, id_col, vec_col)
     q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
     bq = bucket_rows(
@@ -1185,21 +1150,9 @@ def lsh_topk(
     scored = candidates.select(
         query_id_col,
         id_col,
-        F.round(cosine_fixed(F.col("_qvec"), F.col(vec_col), dim), 6).alias("cos_sim"),
+        F.round(cosine(F.col("_qvec"), F.col(vec_col)), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            "cos_sim",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _rank_topk(scored, k, query_id_col, id_col)
 
 
 def quantized_topk(
@@ -1246,19 +1199,7 @@ def quantized_topk(
         ),
     )
     scored = pairs.select(query_id_col, id_col, score.alias("qcos"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("qcos").desc_nulls_last(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            "qcos",
-            F.col("rank").cast("bigint").alias("rank"),
-        )
-    )
+    return _rank_topk(scored, k, query_id_col, id_col, "qcos")
 
 
 def _empty_topk(
@@ -1370,7 +1311,7 @@ def _pq_code_cols(vec_col: str, codebooks, cc) -> list:
 
 
 def _pq_encode(
-    df: DataFrame, codebooks, cc, dim: int, vec_col: str
+    df: DataFrame, codebooks, cc, vec_col: str
 ) -> DataFrame:
     """Append ``_c0.._c{m-1}`` PQ codes to any frame carrying
     ``vec_col`` — the one shared encode entry point for the inline,
@@ -1490,16 +1431,16 @@ def pq_topk(
     encoded = (
         _pq_encode(
             corpus.select(F.col(id_col), F.col(vec_col)),
-            codebooks, cc, dim, vec_col,
+            codebooks, cc, vec_col,
         )
         .withColumn("_rn", F.sqrt(_pq_recon2(cc).cast("double")))
         .drop(vec_col)
     )
     cvec = corpus.select(
-        F.col(id_col), F.col(vec_col), norm_fixed(F.col(vec_col), dim).alias("_cn")
+        F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("_cn")
     )
     return _pq_adc_rerank(
-        encoded, cvec, queries, codebooks, dim, k, rerank,
+        encoded, cvec, queries, codebooks, k, rerank,
         id_col, vec_col, query_id_col,
     )
 
@@ -1509,7 +1450,6 @@ def _pq_adc_rerank(
     cvec: DataFrame,
     queries: DataFrame,
     codebooks: list[list[list[float]]],
-    dim: int,
     k: int,
     rerank: int,
     id_col: str,
@@ -1528,7 +1468,7 @@ def _pq_adc_rerank(
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("_qvec"),
-        norm_fixed(F.col(vec_col), dim).alias("_qn"),
+        norm(F.col(vec_col)).alias("_qn"),
     )
     qlut = q.select(query_id_col, F.col("_qn"), *_pq_lut_cols("_qvec", codebooks))
     # --- ADC scan: codes-only corpus x broadcast queries ----------------
@@ -1537,13 +1477,28 @@ def _pq_adc_rerank(
         _pq_adc_dot(m).cast("double") / (F.col("_qn") * F.col("_rn")), 6
     )
     scored = pairs.select(query_id_col, id_col, adc_cos.alias("_adc"))
-    wc = Window.partitionBy(query_id_col).orderBy(F.col("_adc").desc_nulls_last(), F.col(id_col))
-    cand = (
-        scored.withColumn("_r", F.row_number().over(wc))
-        .filter(F.col("_r") <= rerank)
-        .select(query_id_col, id_col)
+    return _exact_rerank(
+        scored, cvec, q, k, rerank, id_col, vec_col, query_id_col
     )
-    # --- exact re-rank of the bounded candidate set ---------------------
+
+
+def _exact_rerank(
+    scored: DataFrame,
+    cvec: DataFrame,
+    q: DataFrame,
+    k: int,
+    rerank: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """The PQ family's last two steps: cut the ADC-``scored`` pairs to
+    the top ``rerank`` per query, then re-rank those candidates with the
+    exact cosine from the (id, vec, _cn) side and the broadcast
+    (query id, _qvec, _qn) side."""
+    cand = _rank_topk(
+        scored, rerank, query_id_col, id_col, "_adc", "_r"
+    ).select(query_id_col, id_col)
     rr = (
         cvec.join(F.broadcast(cand), id_col)
         .join(F.broadcast(q), query_id_col)
@@ -1551,18 +1506,14 @@ def _pq_adc_rerank(
             query_id_col,
             id_col,
             F.round(
-                dot_fixed(F.col("_qvec"), F.col(vec_col), dim)
-                / (F.col("_qn") * F.col("_cn")),
+                cosine(
+                    F.col("_qvec"), F.col(vec_col), F.col("_qn"), F.col("_cn")
+                ),
                 6,
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        rr.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos_sim", F.col("rank").cast("bigint").alias("rank"))
-    )
+    return _rank_topk(rr, k, query_id_col, id_col)
 
 
 def ivfpq_topk(
@@ -1623,17 +1574,17 @@ def ivfpq_topk(
     # (guide §4.2; identical values, see _cells_kernel/_codes_kernel) ----
     encoded = (
         _pq_encode(
-            _ivf_assign(corpus, cents, dim, id_col, vec_col).drop("_n"),
-            codebooks, cc, dim, vec_col,
+            _ivf_assign(corpus, cents, id_col, vec_col).drop("_n"),
+            codebooks, cc, vec_col,
         )
         .withColumn("_rn", F.sqrt(_pq_recon2(cc).cast("double")))
         .drop(vec_col)
     )
     cvec = corpus.select(
-        F.col(id_col), F.col(vec_col), norm_fixed(F.col(vec_col), dim).alias("_cn")
+        F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("_cn")
     )
     return _ivfpq_probe(
-        encoded, cvec, queries, cents, codebooks, dim, k, n_probe, rerank,
+        encoded, cvec, queries, cents, codebooks, k, n_probe, rerank,
         id_col, vec_col, query_id_col,
     )
 
@@ -1644,7 +1595,6 @@ def _ivfpq_probe(
     queries: DataFrame,
     cents: list[tuple[int, list[float], float]],
     codebooks: list[list[list[float]]],
-    dim: int,
     k: int,
     n_probe: int,
     rerank: int,
@@ -1662,14 +1612,13 @@ def _ivfpq_probe(
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("_qvec"),
-        norm_fixed(F.col(vec_col), dim).alias("_qn"),
+        norm(F.col(vec_col)).alias("_qn"),
     )
     probe_structs = F.array(
         *[
             F.struct(
-                (
-                    dot(F.col("_qvec"), lit_doubles(v))
-                    / (F.col("_qn") * F.lit(nn))
+                cosine(
+                    F.col("_qvec"), lit_doubles(v), F.col("_qn"), F.lit(nn)
                 ).alias("c"),
                 F.lit(cid).alias("cid"),
             )
@@ -1700,35 +1649,8 @@ def _ivfpq_probe(
         _pq_adc_dot(m).cast("double") / (F.col("_qn") * F.col("_rn")), 6
     )
     scored = pairs.select(query_id_col, id_col, adc_cos.alias("_adc"))
-    wc = Window.partitionBy(query_id_col).orderBy(
-        F.col("_adc").desc_nulls_last(), F.col(id_col)
-    )
-    cand = (
-        scored.withColumn("_r", F.row_number().over(wc))
-        .filter(F.col("_r") <= rerank)
-        .select(query_id_col, id_col)
-    )
-    # --- exact re-rank of the bounded candidate set ---------------------
-    rr = (
-        cvec.join(F.broadcast(cand), id_col)
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                dot_fixed(F.col("_qvec"), F.col(vec_col), dim)
-                / (F.col("_qn") * F.col("_cn")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        rr.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col, id_col, "cos_sim", F.col("rank").cast("bigint").alias("rank")
-        )
+    return _exact_rerank(
+        scored, cvec, q, k, rerank, id_col, vec_col, query_id_col
     )
 
 
@@ -1788,8 +1710,8 @@ def build_pq_index(
     if cents and codebooks and codebooks[0]:
         cc = _pq_codeword_norms(codebooks)
         encoded = _pq_encode(
-            _ivf_assign(corpus, cents, dim, id_col, vec_col),
-            codebooks, cc, dim, vec_col,
+            _ivf_assign(corpus, cents, id_col, vec_col),
+            codebooks, cc, vec_col,
         ).withColumn("_rn", F.sqrt(_pq_recon2(cc).cast("double")))
     else:
         encoded = corpus.limit(0).select(
@@ -1800,18 +1722,8 @@ def build_pq_index(
             *[F.lit(None).cast("int").alias(f"_c{j}") for j in range(m)],
             F.lit(None).cast("double").alias("_rn"),
         )
-    writer = encoded.write.mode("overwrite").bucketBy(n_buckets, "_cid")
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table_name)
-    cent_df = spark.createDataFrame(
-        [(cid, [float(x) for x in v]) for cid, v, _ in cents],
-        schema="cid INT, cvec ARRAY<DOUBLE>",
-    )
-    cw = cent_df.write.mode("overwrite")
-    if path is not None:
-        cw = cw.option("path", path + "_centroids")
-    cw.saveAsTable(table_name + "_centroids")
+    write_bucketed(encoded, table_name, "_cid", n_buckets, path=path)
+    _write_centroids(spark, cents, table_name, path)
     cb_df = spark.createDataFrame(
         [
             (j, code, [float(x) for x in cwv])
@@ -1820,10 +1732,10 @@ def build_pq_index(
         ],
         schema="j INT, code INT, cw ARRAY<DOUBLE>",
     )
-    bw = cb_df.write.mode("overwrite")
-    if path is not None:
-        bw = bw.option("path", path + "_codebooks")
-    bw.saveAsTable(table_name + "_codebooks")
+    write_bucketed(
+        cb_df, table_name + "_codebooks", None,
+        path=path and path + "_codebooks",
+    )
 
 
 def load_pq_codebooks(spark: SparkSession, table_name: str) -> list[list[list[float]]]:
@@ -1862,11 +1774,11 @@ def append_pq_index(
     cc = _pq_codeword_norms(codebooks)
     encoded = _pq_encode(
         _ivf_assign(
-            valid_vectors(new_rows, id_col, vec_col), cents, dim, id_col, vec_col
+            valid_vectors(new_rows, id_col, vec_col), cents, id_col, vec_col
         ),
-        codebooks, cc, dim, vec_col,
+        codebooks, cc, vec_col,
     ).withColumn("_rn", F.sqrt(_pq_recon2(cc).cast("double")))
-    encoded.write.mode("append").bucketBy(n_buckets, "_cid").saveAsTable(table_name)
+    write_bucketed(encoded, table_name, "_cid", n_buckets, mode="append")
 
 
 def pq_persisted_topk(
@@ -1898,7 +1810,7 @@ def pq_persisted_topk(
     )
     cvec = t.select(F.col(id_col), F.col(vec_col), F.col("_n").alias("_cn"))
     return _pq_adc_rerank(
-        encoded, cvec, queries, codebooks, dim, k, rerank,
+        encoded, cvec, queries, codebooks, k, rerank,
         id_col, vec_col, query_id_col,
     )
 
@@ -1935,7 +1847,7 @@ def ivfpq_persisted_topk(
     )
     cvec = t.select(F.col(id_col), F.col(vec_col), F.col("_n").alias("_cn"))
     return _ivfpq_probe(
-        encoded, cvec, queries, cents, codebooks, dim, k, n_probe, rerank,
+        encoded, cvec, queries, cents, codebooks, k, n_probe, rerank,
         id_col, vec_col, query_id_col,
     )
 
@@ -1948,7 +1860,6 @@ def mmr_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein,
     SIGIR'98): greedily pick k of the top-m cosine candidates, each round
@@ -1973,7 +1884,7 @@ def mmr_topk(
 
     cands = brute_force_topk(
         corpus, queries, k=m, id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, dim=dim,
+        query_id_col=query_id_col,
     ).select(
         query_id_col,
         id_col,
@@ -2115,10 +2026,4 @@ def ivf_exact_refined_topk(
             F.round(cosine(F.col("_qv"), F.col(vec_col)), 6).alias("cos_sim"),
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, k, "query_id", id_col)

@@ -60,18 +60,22 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 
 
 # The embedding family's invalid-input contract, SQL side: a row with a
-# null id, a null vector, or a vector carrying any NULL or non-finite
-# element is
-# excluded from index builds, scans, and joins (the operators filter
-# identically — see operators/similarity.py:valid_vectors). A no-op on
-# clean fixtures; on dirty data it keeps both engines' samples/buckets/
-# ranks aligned (DuckDB's list_* functions raise on NULL inputs rather
-# than propagating them, and a single NaN/Inf element otherwise aborts
-# integer quantizer casts or poisons every distance it touches).
+# null id, a null vector, a vector carrying any NULL or non-finite
+# element, or a zero-norm vector (no element with a non-zero double
+# square: all zeros, or empty) is excluded from index builds, scans, and
+# joins (the operators filter identically — see
+# operators/similarity.py:valid_vectors). A no-op on clean fixtures; on
+# dirty data it keeps both engines' samples/buckets/ranks aligned
+# (DuckDB's list_* functions raise on NULL inputs rather than
+# propagating them, a single NaN/Inf element otherwise aborts integer
+# quantizer casts or poisons every distance it touches, and each engine
+# resolves a zero-norm cosine's 0/0 differently).
 _EMB_VALID = (
     "(SELECT * FROM embeddings"
     " WHERE vec_id IS NOT NULL AND embedding IS NOT NULL"
-    " AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0)"
+    " AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0"
+    " AND len(list_filter(embedding,"
+    " x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE) <> 0)) > 0)"
 )
 
 

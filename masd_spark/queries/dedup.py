@@ -655,7 +655,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is the registered corpus-scale plan.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    return cosine_pairs(emb, threshold=0.35, dim=64)
+    return cosine_pairs(emb, threshold=0.35)
 
 
 # LSH parameters for the bucketed near-dup (shared by the Spark query, the
@@ -885,7 +885,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from masd_spark.operators.similarity import cosine_pairs
 
     alldrop = (
-        cosine_pairs(emb, threshold=_EMB_THRESHOLD, dim=64)
+        cosine_pairs(emb, threshold=_EMB_THRESHOLD)
         .select(F.col("id_b").alias("vec_id"))
         .distinct()
         # r8: reused by the count below AND the escaped anti-join —

@@ -967,9 +967,7 @@ def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from masd_spark.operators.similarity import mmr_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return mmr_topk(
-        emb, _queries_df(emb), k=_MMR_K, m=_MMR_M, dim=EMBEDDING_DIM
-    )
+    return mmr_topk(emb, _queries_df(emb), k=_MMR_K, m=_MMR_M)
 
 
 _KM_SCALE = 10**4
@@ -1450,7 +1448,7 @@ def emb_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _exact_leg(emb: DataFrame) -> DataFrame:
-    return brute_force_topk(emb, _queries_df(emb), k=10, dim=EMBEDDING_DIM)
+    return brute_force_topk(emb, _queries_df(emb), k=10)
 
 
 def _lsh_leg(emb: DataFrame) -> DataFrame:

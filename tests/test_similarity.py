@@ -14,93 +14,73 @@ def test_ann_cosine_topk_parity(spark):
     compare_query(spark, REGISTRY["ann_cosine_topk"], SF_ORACLE)
 
 
-def test_brute_force_arrow_kernel_matches_hof(spark):
-    """Equality pin for the r8 mapInArrow scoring path: the NumPy kernel
-    must reproduce the pure-JVM HOF join ROW-FOR-ROW (same ids, same
-    rounded cosines, same ranks) on the fixture corpus — the shape every
-    declared query scores. Degenerate vectors are out of scope here: the
-    HOF reference itself raises under ANSI on a zero-norm vector
-    (dot / (qn * cn) -> DIVIDE_BY_ZERO at the _cn projection), so there
-    is no JVM behavior for the kernel to match on that shape; both paths
-    share the valid_vectors() contract for null/NaN/Inf elements."""
-    import masd_spark.operators.similarity as S
-    from masd_spark.operators.similarity import brute_force_topk
+def _fixture_corpus(spark):
     from masd_spark.sources.tables import load_table
 
-    corpus = load_table(spark, SF_ORACLE, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    queries = corpus.filter(F.col("vec_id") % 100 == 0).select(
+    return load_table(spark, SF_ORACLE, "embeddings")
+
+
+def _every_100th(corpus):
+    return corpus.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
 
-    def run():
-        df = brute_force_topk(corpus, queries, k=10, dim=64)
-        return sorted(
-            ((r[0], r[1], str(r[2]), r[3]) for r in df.collect())
-        )
 
-    prior = S._ARROW_TOPK
-    try:
-        S._ARROW_TOPK = True
-        arrow_rows = run()
-        S._ARROW_TOPK = False
-        hof_rows = run()
-    finally:
-        S._ARROW_TOPK = prior
-    assert arrow_rows == hof_rows
+def _rows(df):
+    return sorted(tuple(str(v) for v in r) for r in df.collect())
+
+
+def test_brute_force_arrow_kernel_matches_hof(spark):
+    """Equality pin for brute_force_topk's mapInArrow scoring: the NumPy
+    kernel must reproduce the JVM reference (_brute_force_topk_jvm)
+    ROW-FOR-ROW (same ids, same rounded cosines, same ranks) on the
+    fixture corpus — the shape every declared query scores. Zero-norm
+    and empty vectors are pinned in
+    test_zero_and_empty_vectors_excluded_on_every_path."""
+    from masd_spark.operators.similarity import (
+        _brute_force_topk_jvm,
+        brute_force_topk,
+    )
+
+    corpus = _fixture_corpus(spark)
+    queries = _every_100th(corpus)
+    arrow_rows = _rows(brute_force_topk(corpus, queries, k=10))
+    assert arrow_rows == _rows(_brute_force_topk_jvm(corpus, queries, k=10))
     assert len(arrow_rows) > 0
 
 
 def test_cosine_pairs_arrow_kernel_matches_theta_join(spark):
-    """Equality pin for the r8 mapInArrow all-pairs path: the NumPy
-    kernel must reproduce the pure-JVM theta-join ROW-FOR-ROW (same
-    pairs, same rounded cosines) on the fixture corpus. Same scope
-    contract as the brute-force pin above: degenerate (zero-norm)
-    vectors have no JVM behavior to match — the reference plan itself
-    aborts under ANSI — so the kernel raises on them instead."""
-    import masd_spark.operators.similarity as S
-    from masd_spark.operators.similarity import cosine_pairs
-    from masd_spark.sources.tables import load_table
+    """Equality pin for cosine_pairs' mapInArrow all-pairs path: the
+    NumPy kernel must reproduce the JVM theta-join reference
+    (_cosine_pairs_jvm) ROW-FOR-ROW (same pairs, same rounded cosines)
+    on the fixture corpus, with and without a group column."""
+    from masd_spark.operators.similarity import _cosine_pairs_jvm, cosine_pairs
 
-    corpus = load_table(spark, SF_ORACLE, "embeddings").select(
-        "vec_id", "embedding"
-    )
-
-    def run():
-        df = cosine_pairs(corpus, threshold=0.35, dim=64)
-        return sorted((r[0], r[1], str(r[2])) for r in df.collect())
-
-    prior = S._ARROW_PAIRS
-    try:
-        S._ARROW_PAIRS = True
-        arrow_rows = run()
-        S._ARROW_PAIRS = False
-        hof_rows = run()
-    finally:
-        S._ARROW_PAIRS = prior
-    assert arrow_rows == hof_rows
+    corpus = _fixture_corpus(spark)
+    arrow_rows = _rows(cosine_pairs(corpus, threshold=0.35))
+    assert arrow_rows == _rows(_cosine_pairs_jvm(corpus, threshold=0.35))
     assert len(arrow_rows) > 0
+    grouped = corpus.withColumn("g", (F.col("vec_id") % 3).cast("int"))
+    arrow_rows = _rows(cosine_pairs(grouped, 0.35, group_col="g"))
+    assert arrow_rows == _rows(_cosine_pairs_jvm(grouped, 0.35, group_col="g"))
+    assert 0 < len(arrow_rows) < len(_rows(cosine_pairs(corpus, 0.35)))
 
 
 def test_bucket_rows_arrow_kernel_matches_hof(spark):
-    """Equality pin for the r8 vectorized LSH bucketing: the mapInArrow
-    kernel must emit the IDENTICAL (id, table, bucket) row multiset as
-    the HOF explode plan — same column-stepped fold doubles, same sign
-    test, same bit sums — on the fixture corpus AND on a crafted frame
-    with ragged vector lengths (length != dim folds to NULL in the HOF
-    path and must bucket to 0 per table in both)."""
-    import masd_spark.operators.similarity as S
-    from masd_spark.operators.similarity import bucket_rows, valid_vectors
-    from masd_spark.sources.tables import load_table
-
-    corpus = valid_vectors(
-        load_table(spark, SF_ORACLE, "embeddings").select(
-            "vec_id", "embedding"
-        ),
-        "vec_id",
-        "embedding",
+    """Equality pin for the vectorized LSH bucketing: the mapInArrow
+    kernel (bucket_rows) must emit the IDENTICAL (id, table, bucket) row
+    multiset as the HOF explode reference (_bucket_rows_hof) — same
+    column-stepped fold doubles, same sign test, same bit sums — on the
+    fixture corpus AND on a crafted frame with ragged vector lengths
+    (length != dim folds to NULL in the HOF path and must bucket to 0
+    per table in both)."""
+    from masd_spark.operators.similarity import (
+        _bucket_rows_hof,
+        bucket_rows,
+        valid_vectors,
     )
+
+    corpus = valid_vectors(_fixture_corpus(spark), "vec_id", "embedding")
     ragged = spark.createDataFrame(
         [
             (1, [0.5] * 64),
@@ -113,58 +93,142 @@ def test_bucket_rows_arrow_kernel_matches_hof(spark):
     )
 
     for frame in (corpus, ragged):
-        def run():
-            df = bucket_rows(frame, 64, 6, 8, 42, "vec_id", "embedding")
-            return sorted((r[0], r[1], r[2]) for r in df.collect())
-
-        prior = S._ARROW_BUCKETS
-        try:
-            S._ARROW_BUCKETS = True
-            arrow_rows = run()
-            S._ARROW_BUCKETS = False
-            hof_rows = run()
-        finally:
-            S._ARROW_BUCKETS = prior
-        assert arrow_rows == hof_rows
+        args = (frame, 64, 6, 8, 42, "vec_id", "embedding")
+        arrow_rows = sorted(tuple(r) for r in bucket_rows(*args).collect())
+        assert arrow_rows == sorted(
+            tuple(r) for r in _bucket_rows_hof(*args).collect()
+        )
         assert len(arrow_rows) > 0
     # ragged rows really do land in bucket 0 of every table
     assert all(b == 0 for (i, t, b) in arrow_rows if i in (2, 3, 4))
 
 
-def test_semantic_dedup_arrow_kernel_matches_cluster_join(spark):
-    """Equality pin for semantic_dedup's intra-cluster pair stage on the
-    shared Arrow kernel (bucket column = cluster id): identical
-    (vec_id, cluster, keep) verdicts vs the pure-JVM cluster equi-join.
-    The assignment is INJECTED (vec_id % 3) so the pin isolates the pair
-    stage — float Lloyd centroids are not bit-stable across runs and
-    would make a whole-pipeline pin flaky."""
-    import masd_spark.operators.similarity as S
-    from masd_spark.operators.clustering import semantic_dedup
+def _injected_clusters(emb):
+    """vec_id % 3 as the cluster: isolates semantic_dedup's pair stage
+    (float Lloyd centroids are not bit-stable across runs and would make
+    a whole-pipeline pin flaky)."""
     from masd_spark.operators.similarity import valid_vectors
-    from masd_spark.sources.tables import load_table
 
-    emb = load_table(spark, SF_ORACLE, "embeddings")
-    assignment = valid_vectors(emb, "vec_id", "embedding").select(
+    return valid_vectors(emb, "vec_id", "embedding").select(
         "vec_id", (F.col("vec_id") % 3).cast("int").alias("cluster")
     )
 
-    def run():
-        df = semantic_dedup(
-            emb, dim=64, threshold=0.35, assignment=assignment
-        )
-        return sorted((r[0], r[1], r[2]) for r in df.collect())
 
-    prior = S._ARROW_PAIRS
-    try:
-        S._ARROW_PAIRS = True
-        arrow_rows = run()
-        S._ARROW_PAIRS = False
-        jvm_rows = run()
-    finally:
-        S._ARROW_PAIRS = prior
-    assert arrow_rows == jvm_rows
-    assert len(arrow_rows) > 0
-    assert any(not r[2] for r in arrow_rows)  # some drops actually happen
+def test_semantic_dedup_arrow_kernel_matches_cluster_join(spark):
+    """semantic_dedup's verdicts come from the shared pair scorer: with
+    an injected assignment, its (vec_id, cluster, keep) rows equal the
+    verdicts derived from the JVM reference _cosine_pairs_jvm grouped by
+    cluster (a row is dropped iff it is the higher id of a pair)."""
+    from masd_spark.operators.clustering import semantic_dedup
+    from masd_spark.operators.similarity import _cosine_pairs_jvm
+
+    emb = _fixture_corpus(spark)
+    assignment = _injected_clusters(emb)
+    got = sorted(
+        tuple(r)
+        for r in semantic_dedup(
+            emb, dim=64, threshold=0.35, assignment=assignment
+        ).collect()
+    )
+    members = emb.join(assignment, "vec_id")
+    dropped = {
+        r.id_b
+        for r in _cosine_pairs_jvm(members, 0.35, group_col="cluster").collect()
+    }
+    want = sorted(
+        (r.vec_id, r.cluster, r.vec_id not in dropped)
+        for r in assignment.collect()
+    )
+    assert got == want
+    assert any(not keep for _, _, keep in got)  # some drops actually happen
+
+
+def test_semantic_dedup_verdicts_match_on_both_scorer_routes(spark):
+    """The scorer route is picked by the input, not by a switch: integral
+    ids take the Arrow kernel, fractional ids the JVM equi-join. The
+    same corpus and clusters under both id types must give the same
+    verdicts (ids compare the same as bigint and as double)."""
+    from masd_spark.operators.clustering import semantic_dedup
+    from masd_spark.operators.similarity import _integral_type
+
+    emb = _fixture_corpus(spark)
+    assignment = _injected_clusters(emb)
+
+    def as_double(df):
+        return df.withColumn("vec_id", F.col("vec_id").cast("double"))
+
+    assert _integral_type(emb, "vec_id")
+    assert not _integral_type(as_double(emb), "vec_id")
+    arrow = semantic_dedup(emb, dim=64, threshold=0.35, assignment=assignment)
+    jvm = semantic_dedup(
+        as_double(emb), dim=64, threshold=0.35,
+        assignment=as_double(assignment),
+    )
+    arrow_rows = sorted((int(r[0]), r[1], r[2]) for r in arrow.collect())
+    assert arrow_rows == sorted((int(r[0]), r[1], r[2]) for r in jvm.collect())
+    assert any(not keep for _, _, keep in arrow_rows)
+
+
+def test_zero_and_empty_vectors_excluded_on_every_path(spark, tmp_path):
+    """Zero-norm contract: an all-zero vector and an empty vector have
+    no direction (cosine is 0/0), so valid_vectors and the SQL twin
+    exclude them from corpus and queries alike. Planted in both roles
+    next to real fixture vectors, they must appear in no path's output,
+    and brute_force_topk, its JVM reference, cosine_pairs on both
+    scorers, and the ann_cosine_topk / dedup_embedding_cosine oracles
+    must agree. (Before the contract the paths disagreed: the NumPy
+    kernel ranked the zero vector first with NaN, cosine() last with
+    NULL, the precomputed-norm form aborted with DIVIDE_BY_ZERO, and
+    DuckDB scored it -1.0.)"""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from masd_spark.operators.similarity import (
+        _brute_force_topk_jvm,
+        _cosine_pairs_jvm,
+        brute_force_topk,
+        cosine_pairs,
+    )
+    from masd_spark.sources.tables import TABLE_NAMES, load_table
+
+    real = pq.read_table(os.path.join(SF_ORACLE, "embeddings.parquet"))
+    real = real.slice(0, 120)  # ids 0 and 100 are queries
+    planted = {1000: [0.0] * 64, 1100: [], 1001: [0.0] * 64, 1002: []}
+    extra = pa.table(
+        {
+            "vec_id": pa.array(list(planted), type=pa.int64()),
+            "embedding": pa.array(
+                list(planted.values()), type=real.schema.field("embedding").type
+            ),
+            "label": pa.array([0] * len(planted), type=pa.int32()),
+        }
+    ).cast(real.schema)
+    for t in TABLE_NAMES:
+        schema = pq.read_schema(os.path.join(SF_ORACLE, f"{t}.parquet"))
+        pq.write_table(schema.empty_table(), str(tmp_path / f"{t}.parquet"))
+    pq.write_table(
+        pa.concat_tables([real, extra]), str(tmp_path / "embeddings.parquet")
+    )
+    sf_dir = str(tmp_path)
+
+    compare_query(spark, REGISTRY["ann_cosine_topk"], sf_dir)
+    compare_query(spark, REGISTRY["dedup_embedding_cosine"], sf_dir)
+
+    corpus = load_table(spark, sf_dir, "embeddings")
+    queries = _every_100th(corpus)
+    topk = _rows(brute_force_topk(corpus, queries, k=10))
+    assert topk == _rows(_brute_force_topk_jvm(corpus, queries, k=10))
+    pairs = _rows(cosine_pairs(corpus, threshold=0.0))
+    assert pairs == _rows(_cosine_pairs_jvm(corpus, threshold=0.0))
+
+    assert {r[0] for r in topk} == {"0", "100"}
+    assert len(topk) == 20
+    assert len(pairs) > 0
+    ids = {v for r in topk for v in r[:2]} | {v for r in pairs for v in r[:2]}
+    assert not ids & {str(i) for i in planted}
+    assert all(r[2] not in ("None", "nan") for r in topk + pairs)
 
 
 def test_bucketed_cosine_parity(spark):
@@ -434,7 +498,7 @@ def test_semantic_dedup_subset_of_exact_and_recall(spark):
     }
     exact_dropped = {
         r["id_b"]
-        for r in cosine_pairs(emb, threshold=0.35, dim=64)
+        for r in cosine_pairs(emb, threshold=0.35)
         .select("id_b")
         .distinct()
         .collect()

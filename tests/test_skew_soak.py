@@ -310,6 +310,6 @@ def test_embedding_lsh_hot_bucket_bounded(hot_embedding_corpus):
     assert capped_calm == uncapped_calm
     exact = {
         (r["id_a"], r["id_b"], r["cos_sim"])
-        for r in cosine_pairs(calm, threshold=0.999, dim=dim).collect()
+        for r in cosine_pairs(calm, threshold=0.999).collect()
     }
     assert capped_calm == exact
