@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 def write_bucketed(
     df: DataFrame,
     table_name: str,
-    bucket_col: str | None,
+    bucket_col: str,
     n_buckets: int = 8,
     sort_col: str | None = None,
     path: str | None = None,
@@ -29,17 +29,25 @@ def write_bucketed(
     buckets additionally removes the sort from later sort-merge joins.
     ``path`` makes it an EXTERNAL table at that location (managed in the
     warehouse dir otherwise); ``mode="append"`` adds rows, and Spark
-    rejects a bucket spec that differs from the table's. ``bucket_col``
-    None writes a plain table — the small metadata tables an index keeps
-    beside its bucketed rows."""
-    writer = df.write.mode(mode)
-    if bucket_col is not None:
-        writer = writer.bucketBy(n_buckets, bucket_col)
+    rejects a bucket spec that differs from the table's."""
+    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
     if sort_col:
         writer = writer.sortBy(sort_col)
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table_name)
+
+
+def write_metadata_table(
+    df: DataFrame, table_name: str, suffix: str, path: str | None
+) -> None:
+    """Save ``df`` as the plain table ``<table_name><suffix>`` — one of
+    the small metadata tables an index keeps beside its bucketed rows —
+    EXTERNAL at ``<path><suffix>`` when the index has a ``path``."""
+    writer = df.write.mode("overwrite")
+    if path is not None:
+        writer = writer.option("path", path + suffix)
+    writer.saveAsTable(table_name + suffix)
 
 
 def read_table(spark: SparkSession, table_name: str) -> DataFrame:

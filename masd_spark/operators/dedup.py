@@ -47,7 +47,7 @@ from fractions import Fraction
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from masd_spark.operators.bucketing import write_bucketed
+from masd_spark.operators.bucketing import write_bucketed, write_metadata_table
 from masd_spark.operators.skew import drop_overfull_buckets
 from masd_spark.operators.text import fingerprint_md5, kgrams, simhash32, tokens
 
@@ -1087,15 +1087,13 @@ def build_minhash_index(
     write_bucketed(bands, table_name, "band_hash", n_buckets, path=path)
     write_bucketed(
         sh, table_name + "_shingles", id_col, n_buckets,
-        path=path and path + "_shingles",
+        path=None if path is None else path + "_shingles",
     )
     params = spark.createDataFrame(
         [(k, n_hashes, n_bands, max_bucket)],
         schema="k INT, n_hashes INT, n_bands INT, max_bucket INT",
     )
-    write_bucketed(
-        params, table_name + "_params", None, path=path and path + "_params"
-    )
+    write_metadata_table(params, table_name, "_params", path)
 
 
 def load_minhash_params(spark, table_name: str) -> dict:

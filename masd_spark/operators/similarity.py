@@ -33,7 +33,7 @@ from masd_spark.functions.vectors import (
     lit_doubles,
     norm,
 )
-from masd_spark.operators.bucketing import write_bucketed
+from masd_spark.operators.bucketing import write_bucketed, write_metadata_table
 from masd_spark.operators.relational import topk_per_group
 from masd_spark.operators.skew import drop_overfull_buckets
 
@@ -71,7 +71,12 @@ def valid_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     under ANSI, -1.0 from DuckDB's ``list_cosine_similarity``). The norm
     test is ``x * x != 0`` in double for some element — exactly the
     vectors whose folded norm is non-zero, so no path ever divides by a
-    zero norm. The oracle twin is queries/__init__.py:valid_embeddings.
+    zero norm. The L2 operators that share this contract (k-means
+    assignment, IVF/PQ training, PCA) drop zero vectors too, though no
+    0/0 occurs there: one predicate keeps every embedding operator on
+    the same rows, and emb_pca_top_component checks PCA's row count
+    against this filter's. The oracle twin is
+    queries/__init__.py:valid_embeddings.
 
     The element predicate is null-explicit (``x.isNull() | isnan | inf``):
     without the isNull arm, Spark's three-valued logic makes ``~exists``
@@ -89,23 +94,22 @@ def _rank_topk(
     query_id_col: str,
     id_col: str,
     score_col: str = "cos_sim",
-    rank_col: str = "rank",
 ) -> DataFrame:
     """The family's ranker: the top ``k`` rows per query by
     (``score_col`` desc with NULLs last, ``id_col`` asc) — a total
     order, so results are deterministic and engine-portable — as
-    (query, id, score, ``rank_col`` bigint)."""
+    (query, id, score, ``rank`` bigint)."""
     return topk_per_group(
         scored,
         [query_id_col],
         [F.col(score_col).desc(), F.col(id_col)],
         k,
-        rank_col,
+        "rank",
     ).select(
         query_id_col,
         id_col,
         score_col,
-        F.col(rank_col).cast("bigint").alias(rank_col),
+        F.col("rank").cast("bigint").alias("rank"),
     )
 
 
@@ -801,7 +805,6 @@ def _bucket_rows_hof(
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    dim: int,
     k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 4,
@@ -970,7 +973,6 @@ def _ivf_probe(
 def build_ivf_index(
     corpus: DataFrame,
     table_name: str,
-    dim: int,
     n_centroids: int = 16,
     seed: int = 42,
     id_col: str = "vec_id",
@@ -1030,10 +1032,7 @@ def _write_centroids(
         [(cid, [float(x) for x in v]) for cid, v, _ in cents],
         schema="cid INT, cvec ARRAY<DOUBLE>",
     )
-    write_bucketed(
-        cent_df, table_name + "_centroids", None,
-        path=path and path + "_centroids",
-    )
+    write_metadata_table(cent_df, table_name, "_centroids", path)
 
 
 def load_ivf_centroids(
@@ -1052,7 +1051,6 @@ def load_ivf_centroids(
 def append_ivf_index(
     new_rows: DataFrame,
     table_name: str,
-    dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_buckets: int = 16,
@@ -1082,7 +1080,6 @@ def ivf_persisted_topk(
     spark: SparkSession,
     queries: DataFrame,
     table_name: str,
-    dim: int,
     k: int = 10,
     n_probe: int = 4,
     id_col: str = "vec_id",
@@ -1132,7 +1129,11 @@ def lsh_topk(
     corpus = valid_vectors(corpus, id_col, vec_col)
     queries = valid_vectors(queries, query_id_col, vec_col)
     bc = bucket_rows(corpus, dim, n_planes, n_tables, seed, id_col, vec_col)
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
+    q = queries.select(
+        F.col(query_id_col),
+        F.col(vec_col).alias("_qvec"),
+        norm(F.col(vec_col)).alias("_qn"),
+    )
     bq = bucket_rows(
         queries, dim, n_planes, n_tables, seed, query_id_col, vec_col
     )
@@ -1145,12 +1146,18 @@ def lsh_topk(
         .distinct()
     )
     candidates = cand_ids.join(
-        corpus.select(F.col(id_col), F.col(vec_col)), id_col
+        corpus.select(
+            F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("_cn")
+        ),
+        id_col,
     ).join(F.broadcast(q), query_id_col)
     scored = candidates.select(
         query_id_col,
         id_col,
-        F.round(cosine(F.col("_qvec"), F.col(vec_col)), 6).alias("cos_sim"),
+        F.round(
+            cosine(F.col("_qvec"), F.col(vec_col), F.col("_qn"), F.col("_cn")),
+            6,
+        ).alias("cos_sim"),
     )
     return _rank_topk(scored, k, query_id_col, id_col)
 
@@ -1496,9 +1503,9 @@ def _exact_rerank(
     the top ``rerank`` per query, then re-rank those candidates with the
     exact cosine from the (id, vec, _cn) side and the broadcast
     (query id, _qvec, _qn) side."""
-    cand = _rank_topk(
-        scored, rerank, query_id_col, id_col, "_adc", "_r"
-    ).select(query_id_col, id_col)
+    cand = _rank_topk(scored, rerank, query_id_col, id_col, "_adc").select(
+        query_id_col, id_col
+    )
     rr = (
         cvec.join(F.broadcast(cand), id_col)
         .join(F.broadcast(q), query_id_col)
@@ -1732,10 +1739,7 @@ def build_pq_index(
         ],
         schema="j INT, code INT, cw ARRAY<DOUBLE>",
     )
-    write_bucketed(
-        cb_df, table_name + "_codebooks", None,
-        path=path and path + "_codebooks",
-    )
+    write_metadata_table(cb_df, table_name, "_codebooks", path)
 
 
 def load_pq_codebooks(spark: SparkSession, table_name: str) -> list[list[list[float]]]:
@@ -1752,7 +1756,6 @@ def load_pq_codebooks(spark: SparkSession, table_name: str) -> list[list[list[fl
 def append_pq_index(
     new_rows: DataFrame,
     table_name: str,
-    dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_buckets: int = 16,
@@ -1785,7 +1788,6 @@ def pq_persisted_topk(
     spark: SparkSession,
     queries: DataFrame,
     table_name: str,
-    dim: int,
     k: int = 10,
     rerank: int = 50,
     id_col: str = "vec_id",
@@ -1819,7 +1821,6 @@ def ivfpq_persisted_topk(
     spark: SparkSession,
     queries: DataFrame,
     table_name: str,
-    dim: int,
     k: int = 10,
     n_probe: int = 4,
     rerank: int = 100,
@@ -1893,11 +1894,11 @@ def mmr_topk(
     vecs = corpus.select(F.col(id_col), F.col(vec_col))
     ca = cands.join(vecs, id_col).select(
         query_id_col, F.col(id_col).alias("_a"), F.col("rel6"),
-        F.col(vec_col).alias("_va"),
+        F.col(vec_col).alias("_va"), norm(F.col(vec_col)).alias("_na"),
     )
     cb = cands.join(vecs, id_col).select(
         F.col(query_id_col).alias("_qb"), F.col(id_col).alias("_b"),
-        F.col(vec_col).alias("_vb"),
+        F.col(vec_col).alias("_vb"), norm(F.col(vec_col)).alias("_nb"),
     )
     pairs = ca.join(
         cb,
@@ -1908,7 +1909,11 @@ def mmr_topk(
         F.col("_a").alias("cand"),
         "rel6",
         F.col("_b").alias("other"),
-        F.round(cosine(F.col("_va"), F.col("_vb")) * 1e6, 0)
+        F.round(
+            cosine(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
+            * 1e6,
+            0,
+        )
         .cast("bigint")
         .alias("sim6"),
     )
@@ -2011,11 +2016,15 @@ def ivf_exact_refined_topk(
         .filter(F.col("_cand") != F.col("query_id"))
         .select("query_id", F.col("_cand").alias(id_col))
     )
-    vecs = corpus.select(F.col(id_col), F.col(vec_col))
+    vecs = corpus.select(
+        F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("_n")
+    )
     scored = (
         cands.join(
             vecs.select(
-                F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
+                F.col(id_col).alias("query_id"),
+                F.col(vec_col).alias("_qv"),
+                F.col("_n").alias("_qn"),
             ),
             "query_id",
         )
@@ -2023,7 +2032,10 @@ def ivf_exact_refined_topk(
         .select(
             "query_id",
             id_col,
-            F.round(cosine(F.col("_qv"), F.col(vec_col)), 6).alias("cos_sim"),
+            F.round(
+                cosine(F.col("_qv"), F.col(vec_col), F.col("_qn"), F.col("_n")),
+                6,
+            ).alias("cos_sim"),
         )
     )
     return _rank_topk(scored, k, "query_id", id_col)

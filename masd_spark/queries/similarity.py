@@ -158,7 +158,6 @@ def ann_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_ivf_index(
         emb,
         table,
-        dim=EMBEDDING_DIM,
         n_centroids=_IVF_CENTROIDS,
         seed=_IVF_SEED,
         n_buckets=_IVF_CENTROIDS,
@@ -168,7 +167,6 @@ def ann_ivf_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         _queries_df(emb),
         table,
-        dim=EMBEDDING_DIM,
         k=10,
         n_probe=_IVF_PROBE,
     )
@@ -846,7 +844,6 @@ def ann_pq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         _queries_df(emb),
         _pq_index_table(spark, sf_dir),
-        dim=EMBEDDING_DIM,
         k=10,
         rerank=_PQ_RERANK,
     )
@@ -869,7 +866,6 @@ def ann_ivfpq_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         _queries_df(emb),
         _pq_index_table(spark, sf_dir),
-        dim=EMBEDDING_DIM,
         k=10,
         n_probe=_IVF_PROBE,
         rerank=_IVFPQ_RERANK,
@@ -1211,7 +1207,6 @@ def ann_ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     flt = ivf_topk(
         va,
         _queries_df(va),
-        dim=EMBEDDING_DIM,
         k=10,
         n_centroids=_IVF_CENTROIDS,
         n_probe=_IVF_PROBE,
@@ -1460,7 +1455,7 @@ def _lsh_leg(emb: DataFrame) -> DataFrame:
 
 def _ivf_leg(emb: DataFrame) -> DataFrame:
     return ivf_topk(
-        emb, _queries_df(emb), dim=EMBEDDING_DIM, k=10,
+        emb, _queries_df(emb), k=10,
         n_centroids=_IVF_CENTROIDS, n_probe=_IVF_PROBE, seed=_IVF_SEED,
     )
 

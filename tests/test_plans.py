@@ -205,7 +205,7 @@ def test_ivf_refined_keeps_probe_plan_shape(spark):
     # composition the contract certifies
     emb = load_table(spark, SF_SMOKE, "embeddings")
     refined = ivf_topk(
-        emb, _queries_df(emb), dim=EMBEDDING_DIM, k=10,
+        emb, _queries_df(emb), k=10,
         n_centroids=_IVF_CENTROIDS, n_probe=_IVF_PROBE, seed=_IVF_SEED,
         centroids=kmeans_centroids(
             emb, dim=EMBEDDING_DIM, k=_IVF_CENTROIDS, n_iter=3, seed=_IVF_SEED

@@ -179,7 +179,8 @@ def test_zero_and_empty_vectors_excluded_on_every_path(spark, tmp_path):
     must agree. (Before the contract the paths disagreed: the NumPy
     kernel ranked the zero vector first with NaN, cosine() last with
     NULL, the precomputed-norm form aborted with DIVIDE_BY_ZERO, and
-    DuckDB scored it -1.0.)"""
+    DuckDB scored it -1.0.) PCA shares the contract, so the planted
+    rows add nothing to its row count either."""
     import os
 
     import pyarrow as pa
@@ -229,6 +230,11 @@ def test_zero_and_empty_vectors_excluded_on_every_path(spark, tmp_path):
     ids = {v for r in topk for v in r[:2]} | {v for r in pairs for v in r[:2]}
     assert not ids & {str(i) for i in planted}
     assert all(r[2] not in ("None", "nan") for r in topk + pairs)
+
+    from masd_spark.operators.clustering import pca_top_component
+
+    assert pca_top_component(corpus, dim=64)[2] == real.num_rows
+    compare_query(spark, REGISTRY["emb_pca_top_component"], sf_dir)
 
 
 def test_bucketed_cosine_parity(spark):
@@ -292,7 +298,6 @@ def test_ivf_incremental_append_matches_one_shot_build(spark, tmp_path):
         _IVF_PROBE,
         _IVF_SEED,
         _queries_df,
-        EMBEDDING_DIM,
     )
     from masd_spark.sources.tables import load_table
 
@@ -302,22 +307,19 @@ def test_ivf_incremental_append_matches_one_shot_build(spark, tmp_path):
         build_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0),
             table,
-            dim=EMBEDDING_DIM,
             n_centroids=_IVF_CENTROIDS,
             seed=_IVF_SEED,
             path=str(tmp_path / table),
         )
-        append_ivf_index(
-            emb.filter(F.col("vec_id") % 2 == 1), table, dim=EMBEDDING_DIM
-        )
+        append_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), table)
         incr = ivf_persisted_topk(
             spark, _queries_df(emb), table,
-            dim=EMBEDDING_DIM, k=10, n_probe=_IVF_PROBE,
+            k=10, n_probe=_IVF_PROBE,
         )
         cents = [v for _, v, _ in load_ivf_centroids(spark, table)]
         oneshot = ivf_topk(
             emb, _queries_df(emb),
-            dim=EMBEDDING_DIM, k=10,
+            k=10,
             n_centroids=_IVF_CENTROIDS, n_probe=_IVF_PROBE,
             seed=_IVF_SEED, centroids=cents,
         )
@@ -333,17 +335,14 @@ def test_ivf_append_to_empty_index_fails_fast(spark, tmp_path):
     """An index built on an empty corpus has no centroid geometry —
     appending to it must raise, not silently write unassignable rows."""
     from masd_spark.operators.similarity import append_ivf_index, build_ivf_index
-    from masd_spark.queries.similarity import EMBEDDING_DIM
     from masd_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_ORACLE, "embeddings")
     table = "ann_ivf_index_empty_test"
     try:
-        build_ivf_index(
-            emb.limit(0), table, dim=EMBEDDING_DIM, path=str(tmp_path / table)
-        )
+        build_ivf_index(emb.limit(0), table, path=str(tmp_path / table))
         with pytest.raises(ValueError, match="no centroids"):
-            append_ivf_index(emb, table, dim=EMBEDDING_DIM)
+            append_ivf_index(emb, table)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         spark.sql(f"DROP TABLE IF EXISTS {table}_centroids")
@@ -435,7 +434,7 @@ def test_ivf_refined_recall_at_least_seeded(spark):
     exact = REGISTRY["ann_cosine_topk"].fn(spark, SF_ORACLE).cache()
     seeded = REGISTRY["ann_ivf_topk"].fn(spark, SF_ORACLE).cache()
     refined = ivf_topk(
-        emb, _queries_df(emb), dim=EMBEDDING_DIM, k=10,
+        emb, _queries_df(emb), k=10,
         n_centroids=_IVF_CENTROIDS, n_probe=_IVF_PROBE, seed=_IVF_SEED,
         centroids=kmeans_centroids(
             emb, dim=EMBEDDING_DIM, k=_IVF_CENTROIDS, n_iter=3, seed=_IVF_SEED
@@ -769,9 +768,7 @@ def test_pq_incremental_append_matches_one_shot_build(spark, tmp_path):
             ivf_seed=_IVF_SEED,
             path=str(tmp_path / incr_t),
         )
-        append_pq_index(
-            emb.filter(F.col("vec_id") % 2 == 1), incr_t, dim=EMBEDDING_DIM
-        )
+        append_pq_index(emb.filter(F.col("vec_id") % 2 == 1), incr_t)
         # one-shot build over the FULL corpus with the STORED quantizers
         cents = [v for _, v, _ in load_ivf_centroids(spark, incr_t)]
         books = load_pq_codebooks(spark, incr_t)
@@ -790,10 +787,10 @@ def test_pq_incremental_append_matches_one_shot_build(spark, tmp_path):
             (ivfpq_persisted_topk, {"n_probe": _IVF_PROBE, "rerank": 100}),
         ):
             a = sorted(map(tuple, probe(
-                spark, qdf, incr_t, dim=EMBEDDING_DIM, k=10, **kwargs
+                spark, qdf, incr_t, k=10, **kwargs
             ).collect()))
             b = sorted(map(tuple, probe(
-                spark, qdf, full_t, dim=EMBEDDING_DIM, k=10, **kwargs
+                spark, qdf, full_t, k=10, **kwargs
             ).collect()))
             assert a == b and len(a) > 0, probe.__name__
     finally:
@@ -821,10 +818,8 @@ def test_pq_append_to_empty_index_fails_fast(spark, tmp_path):
             emb.limit(0), table, dim=EMBEDDING_DIM, path=str(tmp_path / table)
         )
         with pytest.raises(ValueError, match="no quantizer metadata"):
-            append_pq_index(emb, table, dim=EMBEDDING_DIM)
-        res = pq_persisted_topk(
-            spark, _queries_df(emb), table, dim=EMBEDDING_DIM
-        )
+            append_pq_index(emb, table)
+        res = pq_persisted_topk(spark, _queries_df(emb), table)
         assert res.count() == 0
         assert res.columns == ["query_id", "vec_id", "cos_sim", "rank"]
     finally:
